@@ -2,6 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** A module of gates: each name maps to the function computing its
+  * DataFrame and, where the operator is SQL-expressible, to the DuckDB
+  * oracle run on the same parquet tables.
+  */
+trait GateModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
@@ -9,109 +18,61 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Queries.q1Agg(spark, "/root/testdata/sf0.001")
 
+  /** Every gate module, listed once; both maps below derive from it. */
+  private def modules: Seq[GateModule] = Seq(
+    operators.Queries,
+    operators.TpchMore,
+    operators.TpchFill,
+    operators.JoinShapes,
+    operators.Reshape,
+    operators.AsOf,
+    operators.RangeJoin,
+    operators.Sketch,
+    operators.Quantile,
+    operators.Skew,
+    operators.MergeScenarios,
+    operators.Clustering,
+    operators.ZOrder,
+    operators.Quality,
+    operators.TextOps,
+    operators.TrainPrep,
+    operators.CorpusFilters,
+    operators.Pipeline,
+    operators.PipelineIncr,
+    operators.PipelineMedia,
+    operators.Filtering,
+    operators.Dedup,
+    operators.SubstringDedup,
+    operators.SuffixArray,
+    operators.LineDedup,
+    operators.Bpe,
+    operators.Wordpiece,
+    operators.Unigram,
+    operators.Similarity,
+    operators.Retrieval,
+    operators.Hnsw,
+    operators.PqTrain,
+    operators.GraphOps,
+    operators.UrlOps,
+    operators.Multimodal,
+    operators.AudioFp,
+    operators.VersionedScenarios,
+    operators.DatasetRevScenarios,
+    sources.BdeScenarios,
+    sources.UploadScenarios,
+    sources.ResumeScenarios,
+    sources.JsonlCorpus,
+    sources.OrcCorpus,
+    sources.CsvCorpus,
+    sources.JdbcUpsert,
+    streaming.StreamScenarios)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Queries.queries ++
-      operators.TpchMore.queries ++
-      operators.TpchFill.queries ++
-      operators.JoinShapes.queries ++
-      operators.Reshape.queries ++
-      operators.AsOf.queries ++
-      operators.RangeJoin.queries ++
-      operators.Sketch.queries ++
-      operators.Quantile.queries ++
-      operators.Skew.queries ++
-      operators.MergeScenarios.queries ++
-      operators.Clustering.queries ++
-      operators.ZOrder.queries ++
-      operators.Quality.queries ++
-      operators.TextOps.queries ++
-      operators.TrainPrep.queries ++
-      operators.CorpusFilters.queries ++
-      operators.Pipeline.queries ++
-      operators.PipelineIncr.queries ++
-      operators.PipelineMm.queries ++
-      operators.PipelineMmIncr.queries ++
-      operators.Filtering.queries ++
-      operators.Dedup.queries ++
-      operators.SubstringDedup.queries ++
-      operators.SuffixArray.queries ++
-      operators.LineDedup.queries ++
-      operators.Bpe.queries ++
-      operators.Wordpiece.queries ++
-      operators.Unigram.queries ++
-      operators.Similarity.queries ++
-      operators.Retrieval.queries ++
-      operators.Hnsw.queries ++
-      operators.PqTrain.queries ++
-      operators.GraphOps.queries ++
-      operators.UrlOps.queries ++
-      operators.Multimodal.queries ++
-      operators.AudioFp.queries ++
-      operators.PipelineAudio.queries ++
-      operators.PipelineAudioIncr.queries ++
-      operators.VersionedScenarios.queries ++
-      operators.DatasetRevScenarios.queries ++
-      sources.BdeScenarios.queries ++
-      sources.UploadScenarios.queries ++
-      sources.ResumeScenarios.queries ++
-      sources.JsonlCorpus.queries ++
-      sources.OrcCorpus.queries ++
-      sources.CsvCorpus.queries ++
-      sources.JdbcUpsert.queries ++
-      streaming.StreamScenarios.queries
+    modules.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
-    operators.Queries.oracles ++
-      operators.TpchMore.oracles ++
-      operators.TpchFill.oracles ++
-      operators.JoinShapes.oracles ++
-      operators.Reshape.oracles ++
-      operators.AsOf.oracles ++
-      operators.RangeJoin.oracles ++
-      operators.Sketch.oracles ++
-      operators.Quantile.oracles ++
-      operators.Skew.oracles ++
-      operators.MergeScenarios.oracles ++
-      operators.Clustering.oracles ++
-      operators.ZOrder.oracles ++
-      operators.Quality.oracles ++
-      operators.TextOps.oracles ++
-      operators.TrainPrep.oracles ++
-      operators.CorpusFilters.oracles ++
-      operators.Pipeline.oracles ++
-      operators.PipelineIncr.oracles ++
-      operators.PipelineMm.oracles ++
-      operators.PipelineMmIncr.oracles ++
-      operators.Filtering.oracles ++
-      operators.Dedup.oracles ++
-      operators.SubstringDedup.oracles ++
-      operators.SuffixArray.oracles ++
-      operators.LineDedup.oracles ++
-      operators.Bpe.oracles ++
-      operators.Wordpiece.oracles ++
-      operators.Unigram.oracles ++
-      operators.Similarity.oracles ++
-      operators.Retrieval.oracles ++
-      operators.Hnsw.oracles ++
-      operators.PqTrain.oracles ++
-      operators.GraphOps.oracles ++
-      operators.UrlOps.oracles ++
-      operators.Multimodal.oracles ++
-      operators.AudioFp.oracles ++
-      operators.PipelineAudio.oracles ++
-      operators.PipelineAudioIncr.oracles ++
-      operators.VersionedScenarios.oracles ++
-      operators.DatasetRevScenarios.oracles ++
-      sources.BdeScenarios.oracles ++
-      sources.UploadScenarios.oracles ++
-      sources.ResumeScenarios.oracles ++
-      sources.JsonlCorpus.oracles ++
-      sources.OrcCorpus.oracles ++
-      sources.CsvCorpus.oracles ++
-      sources.JdbcUpsert.oracles ++
-      streaming.StreamScenarios.oracles
+  def oracleSql: Map[String, String] = modules.map(_.oracles).reduce(_ ++ _)
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * (e.g. `max` of the payload) — which also makes the result
   * deterministic, unlike an unconstrained as-of over duplicate timestamps.
   */
-object AsOf {
+object AsOf extends graft.GateModule {
 
   def asofJoin(left: DataFrame, right: DataFrame, key: String,
                leftTime: String, rightTime: String,

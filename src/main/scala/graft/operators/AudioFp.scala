@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * (`sql/02-bde_control_functions.sql.in:2146`) — arriving rows that
   * duplicate stored content must resolve to the stored copy.
   */
-object AudioFp {
+object AudioFp extends graft.GateModule {
 
   import Multimodal.{AudSamples, PlantMod, PlantShift, genSqlOf, sampleSql}
 

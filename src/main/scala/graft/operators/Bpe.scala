@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * order, final segmentations — as `Merges` unrolled CTE rounds, so the
   * gate checks the algorithm, not just the output shape.
   */
-object Bpe {
+object Bpe extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * identical operation order in Spark and DuckDB, so the IEEE results (and
   * the argmin tie-break on cell id) match bit-for-bit.
   */
-object Clustering {
+object Clustering extends graft.GateModule {
 
   // ------------------------------------------------ connected components
 

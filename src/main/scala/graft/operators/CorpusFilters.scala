@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *   the "join" is a broadcast semi-probe over the corpus scan: no shuffle
   *   of the 100 TB side at all.
   */
-object CorpusFilters {
+object CorpusFilters extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

@@ -65,7 +65,7 @@ object DatasetRev {
   * guarantee. The DuckDB oracle recomputes both reconstructions from the
   * arithmetic derivations and replays the join.
   */
-object DatasetRevScenarios {
+object DatasetRevScenarios extends graft.GateModule {
 
   private val DA = "20240101000000"
   private val DB = "20240102000000"

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * are bounded because the band value is a hash of `bandRows` independent
   * minima, not raw text. AQE skew-join handles residual hot buckets.
   */
-object Dedup {
+object Dedup extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * thresholds are sign tests or one-row corpus means, never percentile
   * windows.
   */
-object Filtering {
+object Filtering extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * when ranks feed a relative sampling policy rather than a probability
   * distribution — documented so the oracle states the same contract.
   */
-object GraphOps {
+object GraphOps extends graft.GateModule {
 
   /** Fixed-point scale (1.0 == 10^12). */
   private val Scale = 1000000000000L

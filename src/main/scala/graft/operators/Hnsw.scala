@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * `knn_refine` rounds; a beam width > 1 is the recall knob (here beam = 1,
   * the paper's ef=1 greedy descent, which keeps the oracle tractable).
   */
-object Hnsw {
+object Hnsw extends graft.GateModule {
 
   /** Level cap (layers 0..2; the corpus thins 4× per level). */
   private val MaxLevel = 2

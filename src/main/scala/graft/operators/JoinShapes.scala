@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * DataFrame API (`"left_semi"` / `"left_anti"` join types) guarantees
   * Catalyst sees the intent directly instead of having to de-correlate.
   */
-object JoinShapes {
+object JoinShapes extends graft.GateModule {
 
   /** Order-priority count for orders with at least one lineitem shipped
     * after the order date (TPC-H Q4 shape; the synthetic schema has no

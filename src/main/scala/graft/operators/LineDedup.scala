@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * (collect_list over an exploded frame grouped by doc_id — bounded by
   * document length).
   */
-object LineDedup {
+object LineDedup extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * in 9 divisible by 9, `o_uniq := -key`) and deletes (keys ending in 2
   * divisible by 11, announced without an image).
   */
-object MergeScenarios {
+object MergeScenarios extends graft.GateModule {
 
   /** The scenario's table registry in the reference `tables.conf` format
     * (`BdeUpload.pm:125 _read_config`): the key column driving

@@ -29,7 +29,7 @@ case class ImageFeatures(doc_id: Long, width: Int, height: Int,
   * the same shape a vectorized decoder (or `mapInPandas` in PySpark) would
   * use — decode cost parallelizes per-partition with zero shuffle.
   */
-object Multimodal {
+object Multimodal extends graft.GateModule {
 
   /** Documents extended with a binary `payload` column. */
   def withPayload(s: SparkSession, dir: String): DataFrame =
@@ -1316,7 +1316,7 @@ object Multimodal {
 
   /** The audio-interleave accounting over ANY `(doc_id, text)` frame —
     * [[audioInterleave]]'s arithmetic factored so the composed audio
-    * pipeline ([[PipelineAudio]]) prices its SURVIVOR set through the
+    * pipeline ([[PipelineMedia]]) prices its SURVIVOR set through the
     * identical definition (the [[mmAccounting]] discipline for the
     * audio modality). Clip geometry joins from the memoized decode /
     * resample frames, so callers must pass corpus doc ids only (the

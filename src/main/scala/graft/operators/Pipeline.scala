@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import Ledger.{Stage, detail}
 
 /** The composed END-TO-END training-data pipeline — the product the solo
   * gates are stages of, chained over one corpus with a per-stage
@@ -57,7 +59,7 @@ import org.apache.spark.sql.functions._
   * frames are persisted for the multi-consumer reads and released after
   * the 9-row result is eagerly materialized.
   */
-object Pipeline {
+object Pipeline extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 
@@ -327,16 +329,11 @@ object Pipeline {
     // + rule failures + stage-1 survivors over qf; stage-3 survivors +
     // eval docs over s3) — each fusion removes a full aggregate
     // stage-chain from the crossJoin tree.
-    def st(c: Column): Column = c.cast("string")
-    val aQF = qf.agg(count(lit(1)).as("d_u"), sum(col("n_tokens")).as("t_u"),
-      sum(col("planted")).as("np"),
-      sum(when(!col("r_words"), 1L).otherwise(0L)).as("fw"),
-      sum(when(!col("r_mean_len"), 1L).otherwise(0L)).as("fm"),
-      sum(when(!col("r_symbols"), 1L).otherwise(0L)).as("fs"),
-      sum(when(!col("r_alpha"), 1L).otherwise(0L)).as("fa"),
-      sum(when(!col("r_stopwords"), 1L).otherwise(0L)).as("fst"),
+    val aQF = qf.agg(count(lit(1)).as("d_u"), Seq(
+      sum(col("n_tokens")).as("t_u"), sum(col("planted")).as("np"),
       sum(when(col("keep"), 1L).otherwise(0L)).as("d1"),
       coalesce(sum(when(col("keep"), col("n_tokens"))), lit(0L)).as("t1"))
+      ++ Ledger.ruleFailures: _*)
     val a2 = s2.agg(count(lit(1)).as("d2"), sum(col("n_tokens")).as("t2"))
     val aG = groups.agg(
       sum(when(col("nc") >= 2, 1L).otherwise(0L)).as("dup_groups"))
@@ -367,43 +364,26 @@ object Pipeline {
       .crossJoin(aC).crossJoin(a4)
       .localCheckpoint(true)
 
-    def row(id: Int, name: String, din: Column, dkept: Column,
-            tin: Column, tout: Column, detail: Column): DataFrame =
-      scalars.select(lit(id.toLong).as("stage_id"), lit(name).as("stage"),
-        din.as("docs_in"), dkept.as("docs_kept"),
-        (din - dkept).as("docs_dropped"),
-        tin.as("tokens_in"), tout.as("tokens_out"), detail.as("detail"))
-
-    val ledger = row(0, "extract", col("d_u"), col("d_u"), col("t_u"),
-        col("t_u"), concat(lit("planted="), st(col("np"))))
-      .unionByName(row(1, "quality", col("d_u"), col("d1"), col("t_u"),
-        col("t1"),
-        concat(lit("r_words="), st(col("fw")), lit(",r_mean_len="),
-          st(col("fm")), lit(",r_symbols="), st(col("fs")),
-          lit(",r_alpha="), st(col("fa")), lit(",r_stopwords="),
-          st(col("fst")))))
-      .unionByName(row(2, "dedup_exact", col("d1"), col("d2"), col("t1"),
-        col("t2"), concat(lit("dup_groups="), st(col("dup_groups")))))
-      .unionByName(row(3, "near_dedup", col("d2"), col("d3"), col("t2"),
-        col("t3"), concat(lit("clusters="), st(col("ncl")),
-          lit(",members="), st(col("nmem")))))
-      .unionByName(row(4, "decontaminate", col("d3"), col("d4"), col("t3"),
-        col("t4"), concat(lit("eval_docs="), st(col("ed")),
-          lit(",tokens_stripped="),
-          st(col("t3") - col("et") - col("t4")))))
-      .unionByName(row(5, "split", col("d4"), col("d4"), col("t4"),
-        col("t4"), concat(lit("train="), st(col("ntr")), lit(",val="),
-          st(col("nva")), lit(",test="), st(col("nte")), lit(",moved="),
-          st(col("moved")))))
-      .unionByName(row(6, "truncate", col("d4"), col("d4"), col("t4"),
-        col("t6"), concat(lit("truncated="), st(col("ntrunc")))))
-      .unionByName(row(7, "pack", col("d4"), col("d4"), col("t6"),
-        col("t6"), concat(lit("bins="), st(col("nbins")))))
-      .unionByName(row(8, "shard", col("d4"), col("d4"), col("t6"),
-        col("t6"), concat(lit("shards="), st(col("nshards")),
-          lit(",check="), st(col("chk")))))
-      .orderBy("stage_id")
-      .localCheckpoint(true)
+    val ledger = Ledger(scalars,
+      Stage("extract", col("d_u"), col("d_u"), col("t_u"), col("t_u"),
+        detail("planted" -> col("np"))),
+      Ledger.quality(col("d_u"), col("d1"), col("t_u"), col("t1")),
+      Stage("dedup_exact", col("d1"), col("d2"), col("t1"), col("t2"),
+        detail("dup_groups" -> col("dup_groups"))),
+      Stage("near_dedup", col("d2"), col("d3"), col("t2"), col("t3"),
+        detail("clusters" -> col("ncl"), "members" -> col("nmem"))),
+      Stage("decontaminate", col("d3"), col("d4"), col("t3"), col("t4"),
+        detail("eval_docs" -> col("ed"),
+          "tokens_stripped" -> (col("t3") - col("et") - col("t4")))),
+      Stage("split", col("d4"), col("d4"), col("t4"), col("t4"),
+        detail("train" -> col("ntr"), "val" -> col("nva"),
+          "test" -> col("nte"), "moved" -> col("moved"))),
+      Stage("truncate", col("d4"), col("d4"), col("t4"), col("t6"),
+        detail("truncated" -> col("ntrunc"))),
+      Stage("pack", col("d4"), col("d4"), col("t6"), col("t6"),
+        detail("bins" -> col("nbins"))),
+      Stage("shard", col("d4"), col("d4"), col("t6"), col("t6"),
+        detail("shards" -> col("nshards"), "check" -> col("chk"))))
 
     // qf/grams/evalG are Memo-owned now (released by Memo.clear) — only
     // the per-call frames unpersist here

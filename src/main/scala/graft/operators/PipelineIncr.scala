@@ -4,6 +4,8 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Ledger.{Stage, detail}
+
 /** The INCREMENTAL composed pipeline — the daily operation
   * [[Pipeline]]'s full load is the twin of: an arriving batch flows
   * quality → exact-dedup-vs-base → maintained-components near-dedup →
@@ -47,7 +49,7 @@ import org.apache.spark.sql.functions._
   * broadcast-shaped at daily-batch sizes. The ledger is O(stages)
   * scalar rows.
   */
-object PipelineIncr {
+object PipelineIncr extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 
@@ -411,16 +413,11 @@ object PipelineIncr {
     // are FUSED into one pass (arrive totals + rule failures + stage-1
     // survivors over i0; stage-3 survivors + eval docs over i3) — each
     // fusion removes a full aggregate stage-chain from the crossJoin tree.
-    def st(c: Column): Column = c.cast("string")
-    val a0 = i0.agg(count(lit(1)).as("d_i0"),
+    val a0 = i0.agg(count(lit(1)).as("d_i0"), Seq(
       coalesce(sum(col("n_tokens")), lit(0L)).as("t_i0"),
-      sum(when(!col("r_words"), 1L).otherwise(0L)).as("fw"),
-      sum(when(!col("r_mean_len"), 1L).otherwise(0L)).as("fm"),
-      sum(when(!col("r_symbols"), 1L).otherwise(0L)).as("fs"),
-      sum(when(!col("r_alpha"), 1L).otherwise(0L)).as("fa"),
-      sum(when(!col("r_stopwords"), 1L).otherwise(0L)).as("fst"),
       coalesce(sum(when(col("keep"), 1L).otherwise(0L)), lit(0L)).as("d1"),
       coalesce(sum(when(col("keep"), col("n_tokens"))), lit(0L)).as("t1"))
+      ++ Ledger.ruleFailures: _*)
     val aN = iNew.agg(count(lit(1)).as("dn"))
     val a2 = i2.agg(count(lit(1)).as("d2"),
       coalesce(sum(col("n_tokens")), lit(0L)).as("t2"))
@@ -462,45 +459,29 @@ object PipelineIncr {
       .crossJoin(a4).crossJoin(broadcast(bTot))
       .localCheckpoint(true)
 
-    def row(id: Int, name: String, din: Column, dkept: Column,
-            tin: Column, tout: Column, detail: Column): DataFrame =
-      scalars.select(lit(id.toLong).as("stage_id"), lit(name).as("stage"),
-        din.as("docs_in"), dkept.as("docs_kept"),
-        (din - dkept).as("docs_dropped"),
-        tin.as("tokens_in"), tout.as("tokens_out"), detail.as("detail"))
-
-    val ledger = row(0, "arrive", col("d_i0"), col("d_i0"), col("t_i0"),
-        col("t_i0"), concat(lit("base_docs="), st(col("base_docs")),
-          lit(",base_tokens="), st(col("base_total"))))
-      .unionByName(row(1, "quality", col("d_i0"), col("d1"), col("t_i0"),
-        col("t1"),
-        concat(lit("r_words="), st(col("fw")), lit(",r_mean_len="),
-          st(col("fm")), lit(",r_symbols="), st(col("fs")),
-          lit(",r_alpha="), st(col("fa")), lit(",r_stopwords="),
-          st(col("fst")))))
-      .unionByName(row(2, "dedup_exact", col("d1"), col("d2"), col("t1"),
-        col("t2"), concat(lit("dup_of_base="), st(col("d1") - col("dn")),
-          lit(",dup_in_batch="), st(col("dn") - col("d2")))))
-      .unionByName(row(3, "near_dedup", col("d2"), col("d3"), col("t2"),
-        col("t3"), concat(lit("vs_base="), st(col("vs_base")),
-          lit(",clusters_new="), st(col("clusters_new")))))
-      .unionByName(row(4, "decontaminate", col("d3"), col("d4"), col("t3"),
-        col("t4"), concat(lit("eval_docs="), st(col("ed")),
-          lit(",tokens_stripped="),
-          st(col("t3") - col("et") - col("t4")))))
-      .unionByName(row(5, "split", col("d4"), col("d4"), col("t4"),
-        col("t4"), concat(lit("train="), st(col("ntr")), lit(",val="),
-          st(col("nva")), lit(",test="), st(col("nte")), lit(",moved="),
-          st(col("moved")))))
-      .unionByName(row(6, "truncate", col("d4"), col("d4"), col("t4"),
-        col("t6"), concat(lit("truncated="), st(col("ntrunc")))))
-      .unionByName(row(7, "pack", col("d4"), col("d4"), col("t6"),
-        col("t6"), concat(lit("bins="), st(col("nbins")))))
-      .unionByName(row(8, "shard", col("d4"), col("d4"), col("t6"),
-        col("t6"), concat(lit("shards="), st(col("nshards")),
-          lit(",check="), st(col("chk")))))
-      .orderBy("stage_id")
-      .localCheckpoint(true)
+    val ledger = Ledger(scalars,
+      Stage("arrive", col("d_i0"), col("d_i0"), col("t_i0"), col("t_i0"),
+        detail("base_docs" -> col("base_docs"),
+          "base_tokens" -> col("base_total"))),
+      Ledger.quality(col("d_i0"), col("d1"), col("t_i0"), col("t1")),
+      Stage("dedup_exact", col("d1"), col("d2"), col("t1"), col("t2"),
+        detail("dup_of_base" -> (col("d1") - col("dn")),
+          "dup_in_batch" -> (col("dn") - col("d2")))),
+      Stage("near_dedup", col("d2"), col("d3"), col("t2"), col("t3"),
+        detail("vs_base" -> col("vs_base"),
+          "clusters_new" -> col("clusters_new"))),
+      Stage("decontaminate", col("d3"), col("d4"), col("t3"), col("t4"),
+        detail("eval_docs" -> col("ed"),
+          "tokens_stripped" -> (col("t3") - col("et") - col("t4")))),
+      Stage("split", col("d4"), col("d4"), col("t4"), col("t4"),
+        detail("train" -> col("ntr"), "val" -> col("nva"),
+          "test" -> col("nte"), "moved" -> col("moved"))),
+      Stage("truncate", col("d4"), col("d4"), col("t4"), col("t6"),
+        detail("truncated" -> col("ntrunc"))),
+      Stage("pack", col("d4"), col("d4"), col("t6"), col("t6"),
+        detail("bins" -> col("nbins"))),
+      Stage("shard", col("d4"), col("d4"), col("t6"), col("t6"),
+        detail("shards" -> col("nshards"), "check" -> col("chk"))))
 
     // qf/grams/evalG are Memo-owned (released by Memo.clear) — only the
     // per-call frames unpersist here

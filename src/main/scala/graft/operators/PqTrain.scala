@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * analytics (`lib/LINZ/BdeUpload.pm` applies datasets it never indexes);
   * PQ training is the piece a 100 TB embedding corpus adds on top.
   */
-object PqTrain {
+object PqTrain extends graft.GateModule {
 
   /** Codes per subspace in the trained book (production: 256; the gate
     * keeps the oracle's unrolled maxmin chain short).

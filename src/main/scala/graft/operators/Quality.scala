@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Each family contributes one scalar row per rule — the output is O(rules),
   * never O(data).
   */
-object Quality {
+object Quality extends graft.GateModule {
 
   private val OrderStatusDomain = Seq("O", "F", "P")
 

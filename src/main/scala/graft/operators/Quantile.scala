@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * sort-within-partitions pass does), and a bounded summary thereafter —
   * query cost never touches the data again.
   */
-object Quantile {
+object Quantile extends graft.GateModule {
 
   private val Shards = 32
   private val Samples = 64

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * are map-side combinable; filters sit directly on the scans so they reach
   * the parquet reader as PushedFilters.
   */
-object Queries {
+object Queries extends graft.GateModule {
 
   /** Pricing summary (TPC-H Q1 shape): single scan, hash aggregate. */
   def q1Agg(s: SparkSession, dir: String): DataFrame = {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * containment filter. One shuffle on (key, bin); hot bins are ordinary
   * skew (AQE/salting), never a cross product.
   */
-object RangeJoin {
+object RangeJoin extends graft.GateModule {
 
   /** Join `points` (with instant column `t`) to `intervals` (with bounds
     * `lo` ≤ t < `hi`) sharing `key`. `binSecs` is the quantization width.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * of `orders_pivot`'s cross-tab), time-series gap filling against a
   * generated calendar, and relative ranking.
   */
-object Reshape {
+object Reshape extends graft.GateModule {
 
   /** Unpivot (melt) the lineitem money columns into (measure, value) rows,
     * then aggregate per measure. The melt is a single `stack` projection —

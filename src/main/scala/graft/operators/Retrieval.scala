@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * bit-identical in DuckDB). A rank of 0 in the output marks "not in
   * that list".
   */
-object Retrieval {
+object Retrieval extends graft.GateModule {
 
   private val K = 10
   private val RrfK = 60

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * per probe before the shuffle), so the exchange carries O(k·probes) rows
   * per task, not the full scored set.
   */
-object Similarity {
+object Similarity extends graft.GateModule {
 
   /** Embedding width of the harness tables. */
   val Dim = 64

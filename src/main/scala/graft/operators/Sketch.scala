@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * k-minima and re-taking the k smallest (how a 1000-executor rollup or a
   * cross-day union would combine them).
   */
-object Sketch {
+object Sketch extends graft.GateModule {
 
   /** [0,1) hash: the first 32 md5 bits over 2^32 — identical in DuckDB. */
   private def h01(c: String): String =

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * times. The join key becomes (key, salt), fanning each hot key's rows
   * across `factor` reducers.
   */
-object Skew {
+object Skew extends graft.GateModule {
 
   /** Inner equi-join `big ⋈ small` on `key`, salted `factor` ways. */
   def saltedJoin(big: DataFrame, small: DataFrame, key: String,

@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * replays): linz_bde_uploader seeds fixture rows the same way its tests
   * verify incremental loads (`t/` fixtures).
   */
-object SubstringDedup {
+object SubstringDedup extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

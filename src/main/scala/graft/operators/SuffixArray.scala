@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * final rank by construction — exactly the groups the dedup statistics
   * read off.
   */
-object SuffixArray {
+object SuffixArray extends graft.GateModule {
 
   /** Static round count for the DuckDB oracle chain: covers documents up
     * to 4^(OracleRounds+1) = 4096 tokens. Rounds past convergence are

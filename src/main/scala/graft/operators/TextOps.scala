@@ -27,7 +27,7 @@ object TextNorm {
   val normSql: String = """lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"""
 }
 
-object TextOps {
+object TextOps extends graft.GateModule {
 
   val norm: Column = TextNorm.norm
   val normSql: String = TextNorm.normSql

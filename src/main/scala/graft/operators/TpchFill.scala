@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *    part-keyed window rank (map-side WindowGroupLimit keeps only one
   *    row per part per map task before the exchange).
   */
-object TpchFill {
+object TpchFill extends graft.GateModule {
 
   // ---------------------------------------------------------- Q6 forecast
 

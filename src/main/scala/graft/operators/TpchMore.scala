@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    happen on exact decimals or in one fixed IEEE expression, so every
   *    query hash-matches DuckDB.
   */
-object TpchMore {
+object TpchMore extends graft.GateModule {
 
   // ------------------------------------------------------------ Q7 volume
 

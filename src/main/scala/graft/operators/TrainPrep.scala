@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * `bde_ApplyLevel0Update` extends into analytics — same tables, same
   * oracle discipline.
   */
-object TrainPrep {
+object TrainPrep extends graft.GateModule {
 
   // ----------------------------------------------------------- corpus split
 

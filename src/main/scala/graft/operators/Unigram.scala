@@ -62,7 +62,7 @@ import org.apache.spark.sql.functions._
   * entries). The per-row DP is O(len · [[MaxPiece]]) with no
   * data-dependent allocation beyond the len-sized cost array.
   */
-object Unigram {
+object Unigram extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
   import Filtering.llog2

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * URLs don't concentrate), with map-side combine. Nothing else
   * shuffles; the per-site audit rides the same aggregate.
   */
-object UrlOps {
+object UrlOps extends graft.GateModule {
 
   /** The synthetic raw URL (shared SQL text — evaluated by Spark's
     * `expr` AND pasted into the DuckDB oracle, so the planted surface

@@ -124,7 +124,7 @@ object Versioned {
   * for keys ≡0 (mod 11), and re-inserts dropped ≡9 keys divisible by 3 at
   * price+100 (exercising delete → re-insert version gaps).
   */
-object VersionedScenarios {
+object VersionedScenarios extends graft.GateModule {
 
   private val RevSqls = """
     r1 AS (SELECT * FROM orders),

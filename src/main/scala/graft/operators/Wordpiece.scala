@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * table is distinct-words × word-length rows joined against a
   * broadcast vocab; tokenization is the same word-keyed lookup join.
   */
-object Wordpiece {
+object Wordpiece extends graft.GateModule {
 
   import TextNorm.{norm, normSql}
 

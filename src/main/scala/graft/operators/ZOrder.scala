@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * output file covers a tight z-interval and its parquet footer min/max on
   * BOTH source columns stays narrow.
   */
-object ZOrder {
+object ZOrder extends graft.GateModule {
 
   private val Bits = 16
 

@@ -24,6 +24,19 @@ object Bde {
 
   val DataMarker = "{CRS-DATA}"
 
+  private val FileRe = """(.*)\.crs(?:\.gz)?""".r
+
+  /** The table stem a BDE file name carries — `pab1.crs` and
+    * `pab1.crs.gz` are both `pab1` — or None when the name (or the last
+    * segment of a path) is not a BDE file. The one place the repository
+    * layout's file-naming rule lives.
+    */
+  def fileStem(path: String): Option[String] =
+    path.substring(path.lastIndexOf('/') + 1) match {
+      case FileRe(stem) => Some(stem)
+      case _ => None
+    }
+
   case class BdeColumn(name: String, bdeType: String, nullable: Boolean) {
     def dataType: DataType = Bde.dataType(bdeType)
     def field: StructField = StructField(name, dataType, nullable)

@@ -179,7 +179,7 @@ object BdeReader {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
-      .filter(n => n.endsWith(".crs") || n.endsWith(".crs.gz"))
+      .filter(Bde.fileStem(_).isDefined)
       .sorted.toSeq
   }
 }

@@ -39,7 +39,7 @@ object BdeRepository {
         .map { st =>
           val files = fs.listStatus(st.getPath)
             .filter(_.isFile).map(_.getPath.toString)
-            .filter(n => n.endsWith(".crs") || n.endsWith(".crs.gz"))
+            .filter(Bde.fileStem(_).isDefined)
             .sorted.toSeq
           Dataset(st.getPath.getName, level, st.getPath.toString, files)
         }.toSeq
@@ -52,8 +52,7 @@ object BdeRepository {
     * `require_all_dataset_files` completeness check.
     */
   def missingFiles(ds: Dataset, tables: Seq[BdeTableDef]): Seq[String] = {
-    val present = ds.files
-      .map(f => new Path(f).getName.replaceAll("\\.crs(\\.gz)?$", "")).toSet
+    val present = ds.files.flatMap(Bde.fileStem).toSet
     val wantLevel = if (ds.level == 0) "0" else "5"
     tables
       .filter(t => t.levels.contains(wantLevel) || t.levels.contains("C"))

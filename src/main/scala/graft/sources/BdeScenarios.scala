@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *   level-5 datasets in name order, with the `CheckStartDate`
   *   (`:1070`) start-time continuity flag.
   */
-object BdeScenarios {
+object BdeScenarios extends graft.GateModule {
 
   /** File-order ∩ target, case-insensitive (reference keeps file order). */
   def selectValidColumns(fileCols: Seq[String], targetCols: Seq[String]): Seq[String] = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * column) or `DROPMALFORMED` — a 100 TB load never aborts on one bad
   * line.
   */
-object CsvCorpus {
+object CsvCorpus extends graft.GateModule {
 
   def write(df: DataFrame, path: String, gzip: Boolean = true): Unit = {
     val w = df.write.mode("overwrite").option("header", "true")

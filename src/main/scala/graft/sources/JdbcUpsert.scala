@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * the wire (statement generation is unit-tested; the gate query checks the
   * generated plan rows end-to-end).
   */
-object JdbcUpsert {
+object JdbcUpsert extends graft.GateModule {
 
   private def q(ident: String): String = "\"" + ident + "\""
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * huge ones. The writer shards by Spark partition, so upstream
   * `repartition(n)` directly controls the shard layout.
   */
-object JsonlCorpus {
+object JsonlCorpus extends graft.GateModule {
 
   /** The `documents` corpus schema, declared once — readers never infer. */
   val DocumentsSchema: StructType = StructType(Seq(

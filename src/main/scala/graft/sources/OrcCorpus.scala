@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.col
   * timestamp (NTZ) encoding, double bit patterns, or null handling breaks
   * the hash.
   */
-object OrcCorpus {
+object OrcCorpus extends graft.GateModule {
 
   def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * that makes daily incrementals possible without replaying the level-0
   * era in-process.
   */
-object ResumeScenarios {
+object ResumeScenarios extends graft.GateModule {
 
   private val D0 = "20240101000000"
   private val D1 = "20240103000000"

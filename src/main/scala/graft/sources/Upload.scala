@@ -65,17 +65,20 @@ final case class ApplyEvent(
   *
   * Scale: each apply is the operators' own single-shuffle plans; the only
   * driver-side values are counts (bookkeeping metadata, as in the
-  * reference's event log). Production runs persist each revision via
-  * [[ParquetSink.writeApplyResult]] / [[ParquetSink.writeVersioned]]
-  * instead of holding the chain in cache.
+  * reference's event log). The per-table loop holds the whole revision
+  * chain in Spark's cache: the start table and every applied revision
+  * are `cache()`d lazily (each plan holding the revision before it),
+  * counted once for the row-count check, and handed together to
+  * [[Versioned.build]], which unions all K+1 of them. Nothing is written
+  * out between applies. Planning work therefore grows faster than
+  * linearly with the number of level-5 datasets K — the catch-up known
+  * defect measured in `perfbench/README.md` ("Known defect: catch-up
+  * cost grows with the chain length K").
   */
 object Upload {
 
-  private def stem(f: String): String =
-    new Path(f).getName.replaceAll("\\.crs(\\.gz)?$", "")
-
   private def filesFor(ds: BdeRepository.Dataset, t: BdeTableDef): Seq[String] =
-    ds.files.filter(f => t.files.contains(stem(f)))
+    ds.files.filter(f => Bde.fileStem(f).exists(t.files.contains))
 
   /** A post-load hook. Registration replaces the reference's
     * `bde_postlevel0_*` / `bde_postupload_*` function-name convention.

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * loop's change-table path derives I/U/D/0 only), so every oracle is a
   * small CTE prefix over `orders`.
   */
-object UploadScenarios {
+object UploadScenarios extends graft.GateModule {
 
   private val D0 = "20240101000000"
   private val D1 = "20240102000000"

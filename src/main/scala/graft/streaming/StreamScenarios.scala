@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * deleted (seq 3), keys ≡0 (mod 7) are re-inserted at price+50 (seq 4) —
   * covering upsert, delete, and delete-then-reinsert lifecycles.
   */
-object StreamScenarios {
+object StreamScenarios extends graft.GateModule {
 
   def changeStream(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)

@@ -88,6 +88,15 @@ class BdeSpec extends SparkSpec {
     assert(got(2).getString(1) == "\\N")  // literal backslash-N is escaped, not NULL
   }
 
+  test("fileStem: .crs and .crs.gz name a table, other files are not BDE") {
+    assert(Bde.fileStem("a.crs").contains("a"))
+    assert(Bde.fileStem("a.crs.gz").contains("a"))
+    assert(Bde.fileStem("file:/repo/level_0/20240101000000/a.crs.gz")
+      .contains("a"))
+    assert(Bde.fileStem("a.csv").isEmpty)
+    assert(Bde.fileStem("a.crs.bak").isEmpty)
+  }
+
   test("reader parses the reference sample files") {
     val f = "/root/reference/t/data/pab1.crs"
     val df = BdeReader.read(spark, Seq(f))

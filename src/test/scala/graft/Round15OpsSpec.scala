@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import graft.operators.PipelineMedia.{Image, fullLoad}
 
 /** Round-15 operator specs: the WordPiece vocab sweep's monotone
   * tradeoff, the decontamination K-sweep's local replay, the 5-gram KN
@@ -251,7 +252,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("pipeline_e2e_mm: stage conservation, vision-token arithmetic, " +
     "and the planted feed exercises the dedup hand-off") {
-    val lg = operators.PipelineMm.pipelineE2eMm(spark, sf).collect()
+    val lg = fullLoad(Image)(spark, sf).collect()
     assert(lg.length == 5)
     assert(lg.map(_.getAs[String]("stage")).toSeq ==
       Seq("arrive", "quality", "image_dedup", "interleave", "shard"))

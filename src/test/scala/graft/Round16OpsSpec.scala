@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.PipelineMedia.{Image, incremental}
 
 /** Round-16 operator specs: the derived LSH signature width's ladder
   * (the r15 weak's fix — properties a cross-engine hash can't
@@ -99,7 +100,7 @@ class Round16OpsSpec extends SparkSpec {
   test("pipeline_e2e_mm_incr: conservation chain holds, vision tokens " +
     "enter only at interleave, and replayed identical images (the " +
     "planted feed arriving with the batch) all die by image dedup") {
-    val rows = operators.PipelineMmIncr.pipelineE2eMmIncr(spark, sf)
+    val rows = incremental(Image)(spark, sf)
       .collect().sortBy(_.getAs[Long]("stage_id"))
     assert(rows.length == 5)
     def d(i: Int, k: String): Long =

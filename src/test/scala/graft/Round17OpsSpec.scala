@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.PipelineMedia.{Audio, Image, fullLoad, incremental}
 
 /** Round-17 operator specs: the audio dedup family (fingerprint, pairs,
   * clusters, composed pipeline) and the decorrelated media universe —
@@ -114,9 +115,9 @@ class Round17OpsSpec extends SparkSpec {
 
   test("pipeline_mm_incr_state: the maintained-state ledger is " +
     "hash-identical to the derived-base ledger") {
-    val a = operators.PipelineMmIncr.pipelineE2eMmIncr(spark, sf).collect()
+    val a = incremental(Image)(spark, sf).collect()
       .map(_.toString).sorted.toSeq
-    val b = operators.PipelineMmIncr.pipelineMmIncrState(spark, sf).collect()
+    val b = incremental(Image, maintained = true)(spark, sf).collect()
       .map(_.toString).sorted.toSeq
     assert(a == b)
     assert(a.nonEmpty)
@@ -153,7 +154,7 @@ class Round17OpsSpec extends SparkSpec {
   test("pipeline_e2e_audio_incr: conservation chain holds, re-crawled " +
     "clips die to the base (existing corpus wins), and the " +
     "maintained-state ledger is hash-identical") {
-    val rows = operators.PipelineAudioIncr.pipelineE2eAudioIncr(spark, sf)
+    val rows = incremental(Audio)(spark, sf)
       .collect().sortBy(_.getAs[Long]("stage_id"))
     assert(rows.length == 5)
     def d(i: Int, k: String): Long =
@@ -177,7 +178,7 @@ class Round17OpsSpec extends SparkSpec {
     // the maintained-state twin reads forests + high-water counters and
     // must be value-identical (the verbatim-shared oracle's claim)
     val a = rows.map(_.toString).sorted.toSeq
-    val b = operators.PipelineAudioIncr.pipelineAudioIncrState(spark, sf)
+    val b = incremental(Audio, maintained = true)(spark, sf)
       .collect().map(_.toString).sorted.toSeq
     assert(a == b)
   }
@@ -185,7 +186,7 @@ class Round17OpsSpec extends SparkSpec {
   test("pipeline_e2e_audio: conservation chain holds, audio tokens " +
     "enter only at interleave at the rate-derived per-clip cost, and " +
     "planted duplicate clips all die by audio dedup") {
-    val rows = operators.PipelineAudio.pipelineE2eAudio(spark, sf)
+    val rows = fullLoad(Audio)(spark, sf)
       .collect().sortBy(_.getAs[Long]("stage_id"))
     assert(rows.length == 5)
     def d(i: Int, k: String): Long =
