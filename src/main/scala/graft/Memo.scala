@@ -24,9 +24,9 @@ object Memo {
   // down or re-run suites call `clear(session)`, which also unpersists
   // the cached data.
   private val sessions =
-    new java.util.WeakHashMap[SparkSession, TrieMap[(String, String), DataFrame]]()
+    new java.util.WeakHashMap[SparkSession, TrieMap[(String, String), AnyRef]]()
 
-  private def framesOf(s: SparkSession): TrieMap[(String, String), DataFrame] =
+  private def framesOf(s: SparkSession): TrieMap[(String, String), AnyRef] =
     sessions.synchronized {
       var m = sessions.get(s)
       if (m == null) { m = TrieMap.empty; sessions.put(s, m) }
@@ -40,7 +40,7 @@ object Memo {
       // builders that materialize-then-release internal state hand over an
       // already-persisted frame; re-caching it would only log a warning
       if (df.storageLevel == StorageLevel.NONE) df.cache() else df
-    })
+    }).asInstanceOf[DataFrame]
 
   /** [[cached]], but the frame is handed over as an EAGER localCheckpoint
     * LEAF. A cached-but-lazy memo keeps its full logical plan, and every
@@ -63,7 +63,20 @@ object Memo {
       // unpersist is a no-op on these — the blocks release via
       // ContextCleaner once the registry drops the reference.
       framesOf(s).getOrElseUpdate((key, dir), mk.localCheckpoint(true))
+        .asInstanceOf[DataFrame]
     else mk
+
+  /** Keep a driver-side by-product of a memoized build (a trained merge
+    * list next to its segmentation table) under the same (session, dir)
+    * lifecycle, so [[clear]] drops it with the frame it came from.
+    */
+  def remember(s: SparkSession, key: String, dir: String, value: AnyRef): Unit =
+    framesOf(s).update((key, dir), value)
+
+  /** The value [[remember]]ed under `key`; fails if nothing is held. */
+  def recall[T](s: SparkSession, key: String, dir: String): T =
+    framesOf(s).getOrElse((key, dir),
+      sys.error(s"Memo: nothing remembered under ($key, $dir)")).asInstanceOf[T]
 
   /** TEST-ONLY seam for the plan-shape specs: inside `f`, [[cachedLeaf]]
     * returns the RAW builder frame (no checkpoint, no registry), so a
@@ -76,13 +89,16 @@ object Memo {
     try f finally leafHandover = true
   }
 
-  /** Unpersist and drop every frame memoized for `s` (bench pass
+  /** Unpersist and drop every frame and value memoized for `s` (bench pass
     * isolation, suite teardown). The next `cached` call rebuilds.
     */
   def clear(s: SparkSession): Unit = sessions.synchronized {
     val m = sessions.get(s)
     if (m != null) {
-      m.values.foreach(df => df.unpersist(): Unit)
+      m.values.foreach {
+        case df: DataFrame => df.unpersist(): Unit
+        case _ =>
+      }
       m.clear()
     }
   }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,12 +42,6 @@ object Bpe extends graft.GateModule {
 
   /** Bounded merge count — the training-loop iteration cap. */
   private[operators] val Merges = 20
-
-  /** Trained merge list per (session, dir): plain driver scalars
-    * accumulated from the per-round argmax rows.
-    */
-  private val mergesCache =
-    TrieMap[(SparkSession, String), Seq[(String, Long)]]()
 
   /** Escape a trained symbol for embedding in an expr literal. */
   private def q(x: String): String =
@@ -104,18 +96,19 @@ object Bpe extends graft.GateModule {
   }
 
   /** The trained segmentation table (word, cnt, seg), memoized per
-    * (session, dir); training fills [[mergesCache]] as a side effect.
+    * (session, dir); training also [[graft.Memo.remember]]s the merge list
+    * under the same key, so [[graft.Memo.clear]] drops both.
     */
   private def segsOf(s: SparkSession, dir: String): DataFrame =
     graft.Memo.cachedLeaf(s, "bpe_segs", dir) {
       val (merges, segs) = trainOn(Tables.documents(s, dir), Merges)
-      mergesCache((s, dir)) = merges
+      graft.Memo.remember(s, "bpe_merges", dir, merges)
       segs
     }
 
   private def trainedMerges(s: SparkSession, dir: String): Seq[(String, Long)] = {
     segsOf(s, dir)
-    mergesCache((s, dir))
+    graft.Memo.recall[Seq[(String, Long)]](s, "bpe_merges", dir)
   }
 
   /** In-plan segmentation of an ARBITRARY word column with a trained merge

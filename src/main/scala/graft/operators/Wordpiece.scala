@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,8 +63,6 @@ object Wordpiece extends graft.GateModule {
                            cb: Long, score: Long) {
     def merged: String = a + (if (b.startsWith("##")) b.substring(2) else b)
   }
-
-  private val mergesCache = TrieMap[(SparkSession, String), Seq[Merge]]()
 
   private def q(x: String): String =
     x.replace("\\", "\\\\").replace("'", "\\'")
@@ -136,17 +132,19 @@ object Wordpiece extends graft.GateModule {
     (acc.result(), segs)
   }
 
-  /** The trained segmentation table, memoized; fills [[mergesCache]]. */
+  /** The trained segmentation table, memoized; training also
+    * [[graft.Memo.remember]]s the merge list under the same key.
+    */
   private def segsOf(s: SparkSession, dir: String): DataFrame =
     graft.Memo.cachedLeaf(s, "wp_segs", dir) {
       val (merges, segs) = trainOn(Tables.documents(s, dir), Merges)
-      mergesCache((s, dir)) = merges
+      graft.Memo.remember(s, "wp_merges", dir, merges)
       segs
     }
 
   private def trainedMerges(s: SparkSession, dir: String): Seq[Merge] = {
     segsOf(s, dir)
-    mergesCache((s, dir))
+    graft.Memo.recall[Seq[Merge]](s, "wp_merges", dir)
   }
 
   /** The trained vocab (piece, raw, cont, rl): every seed single of the

@@ -1,8 +1,11 @@
 package graft.sources
 
+import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{Merge, Versioned}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{CachedLeaf, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -65,15 +68,15 @@ final case class ApplyEvent(
   *
   * Scale: each apply is the operators' own single-shuffle plans; the only
   * driver-side values are counts (bookkeeping metadata, as in the
-  * reference's event log). The per-table loop holds the whole revision
-  * chain in Spark's cache: the start table and every applied revision
-  * are `cache()`d lazily (each plan holding the revision before it),
-  * counted once for the row-count check, and handed together to
-  * [[Versioned.build]], which unions all K+1 of them. Nothing is written
-  * out between applies. Planning work therefore grows faster than
-  * linearly with the number of level-5 datasets K — the catch-up known
-  * defect measured in `perfbench/README.md` ("Known defect: catch-up
-  * cost grows with the chain length K").
+  * reference's event log). The start table and every applied revision are
+  * held as one cached leaf each ([[org.apache.spark.sql.CachedLeaf]]): the
+  * next apply's plan starts at that leaf, not at the chain of applies
+  * before it, so planning work per apply stays flat in the number of
+  * level-5 datasets K, and [[Versioned.build]] unions K+1 leaves — the
+  * Spark-side analog of `table_version` keeping each revision as stored
+  * data. Those K+1 caches per table are held until the session's cache is
+  * cleared (`spark.catalog.clearCache()`): `unpersist` on
+  * [[UploadedTable]]'s frames does not release them.
   */
 object Upload {
 
@@ -161,13 +164,10 @@ object Upload {
       .toMap
   }
 
-  private def checksRow(spark: SparkSession, name: String,
-                        expected: Long, actual: Long): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(Row(name, expected, actual)),
-      StructType(Seq(StructField("check_name", StringType, false),
-        StructField("expected_count", LongType, false),
-        StructField("actual_count", LongType, false))))
+  private val ChecksSchema = StructType(Seq(
+    StructField("check_name", StringType, false),
+    StructField("expected_count", LongType, false),
+    StructField("actual_count", LongType, false)))
 
   private def runTable(spark: SparkSession, datasets: Seq[BdeRepository.Dataset],
                        t: BdeTableDef, changeDef: Option[BdeTableDef],
@@ -207,24 +207,22 @@ object Upload {
     // only the newest matters (GetLevel5Updates keeps just the last)
     if (t.level5IsFull) later5 = later5.takeRight(1)
 
-    var cur = startCur.cache()
-    val key = t.keyColumn.getOrElse(cur.columns.head)
-    val keyType = cur.schema(key).dataType
+    val (start, startN) = CachedLeaf(startCur)
+    val key = t.keyColumn.getOrElse(start.columns.head)
+    val keyType = start.schema(key).dataType
 
-    var rev = 1
-    var snapshots = List(rev -> cur)
+    var cur = start
+    val snapshots = ListBuffer(1 -> start)
     // a fresh level-0 load is all inserts (reference records it as such);
     // a seed's applies were recorded by the run that published it, so a
     // seeded run's bookkeeping starts empty (zero-row if nothing applies)
-    var book: DataFrame =
-      if (startLevel == 0)
-        Merge.bookkeeping(cur.select(lit("I").as(Merge.Action)), startDs, t.name)
-      else null
-    val l0n = cur.count()
+    val books = ListBuffer.empty[DataFrame]
+    if (startLevel == 0)
+      books += Merge.bookkeeping(start.select(lit("I").as(Merge.Action)), startDs, t.name)
     val startCheck =
       if (startLevel == 0) s"${t.name}@$startDs" else s"${t.name}@seed:$startDs"
-    var checks = checksRow(spark, startCheck, l0n, l0n)
-    var before = l0n
+    val checks = ListBuffer(Row(startCheck, startN, startN))
+    var before = startN
 
     var lastEvent = ApplyEvent(t.name, startDs, startLevel, None, None, None, cur)
     if (startLevel == 0) (postApply ++ postLevel0).foreach(_(lastEvent))
@@ -248,29 +246,26 @@ object Upload {
         }
       val (merged, bk) =
         Merge.applyWithBookkeeping(cur, incoming, actions, key, ds.name, t.name)
-      val prev = cur
-      cur = merged.cache()
-      rev += 1
-      snapshots = snapshots :+ (rev -> cur)
-      book = if (book == null) bk else book.unionByName(bk)
-      val after = cur.count()
-      checks = checks.unionByName(
-        checksRow(spark, s"${t.name}@${ds.name}", before, after))
+      val (next, after) = CachedLeaf(merged)
+      snapshots += (snapshots.size + 1) -> next
+      books += bk
+      checks += Row(s"${t.name}@${ds.name}", before, after)
       before = after
       lastEvent = ApplyEvent(t.name, ds.name, 5,
-        Some(prev), Some(incoming), Some(actions), cur)
+        Some(cur), Some(incoming), Some(actions), next)
+      cur = next
       postApply.foreach(_(lastEvent))
     }
     postUpload.foreach(_(lastEvent))
     // grade every apply's (expected=before, actual=after) pair at once
-    val graded = Merge.rowCountChecks(checks,
+    val graded = Merge.rowCountChecks(
+      spark.createDataFrame(checks.asJava, ChecksSchema),
       warnTol = t.rowTolWarning.getOrElse(1.0),
       errTol = t.rowTolError.getOrElse(1.0))
     // a seeded run with zero new datasets still reports a (zeroed)
     // bookkeeping frame so the result shape is uniform
-    if (book == null)
-      book = Merge.bookkeeping(
-        cur.limit(0).select(lit("I").as(Merge.Action)), startDs, t.name)
-    UploadedTable(cur, Versioned.build(snapshots, key), book, graded)
+    val book = books.reduceOption(_ unionByName _).getOrElse(
+      Merge.bookkeeping(cur.limit(0).select(lit("I").as(Merge.Action)), startDs, t.name))
+    UploadedTable(cur, Versioned.build(snapshots.toSeq, key), book, graded)
   }
 }

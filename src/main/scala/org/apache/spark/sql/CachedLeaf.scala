@@ -1,0 +1,37 @@
+package org.apache.spark.sql
+
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Hold a frame as one cached leaf: `cache()` it, materialize it with one
+  * `count()`, and hand back that count with a frame whose plan is a single
+  * `LogicalRDD` over the cached relation. A consumer's plan then starts at
+  * this leaf instead of re-analysing the frame's whole build plan, which
+  * is what keeps a chain of revisions (each derived from the one before)
+  * flat.
+  *
+  * The leaf carries the cached relation's measured statistics (its
+  * in-memory size once materialized) and its output partitioning. Its RDD
+  * reads the cached column buffers, so the storage is the same columnar
+  * cache a plain `cache()` holds; and if those blocks are dropped, the RDD
+  * recomputes them from lineage instead of failing the way a
+  * `localCheckpoint` leaf does. The cache it reads belongs to the input
+  * frame: `unpersist` on the leaf does nothing, so a caller that drops the
+  * input frame holds the cache until the session's cache is cleared
+  * (`spark.catalog.clearCache()`).
+  *
+  * Lives in this package because `Dataset.ofRows` and
+  * `LogicalRDD.fromDataset` are `private[sql]`.
+  */
+object CachedLeaf {
+
+  def apply(df: DataFrame): (DataFrame, Long) = {
+    val n = df.cache().count()
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    // a fresh Dataset over the analyzed plan: its execution is planned now,
+    // so it scans the cached relation even if `df`'s own plan predates it
+    val cached = classic.Dataset.ofRows(ds.sparkSession, ds.logicalPlan)
+    val leaf = LogicalRDD.fromDataset(cached.queryExecution.toRdd, cached,
+      ds.isStreaming)
+    (classic.Dataset.ofRows(ds.sparkSession, leaf), n)
+  }
+}

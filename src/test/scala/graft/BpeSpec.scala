@@ -59,6 +59,17 @@ class BpeSpec extends SparkSpec {
     assert(t1.forall(_.getAs[Long]("pair_count") > 0L))
   }
 
+  test("Memo.clear drops the trained merges; retraining tokenizes identically") {
+    import graft.operators.Wordpiece
+    def run(): Seq[Seq[Seq[Any]]] = Seq(Bpe.bpeTrain(spark, sf),
+      Bpe.tokenizeBpe(spark, sf), Wordpiece.wordpieceTrain(spark, sf),
+      Wordpiece.tokenizeWordpiece(spark, sf))
+      .map(_.collect().map(_.toSeq).toSeq)
+    val first = run()
+    Memo.clear(spark)
+    assert(run() == first)
+  }
+
   test("segmentExpr tokenizes UNSEEN words with the trained merges") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

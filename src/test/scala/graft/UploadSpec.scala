@@ -252,6 +252,102 @@ class UploadSpec extends SparkSpec {
       bk.head.getAs[Long]("n_delete") == 0L)
   }
 
+  // ------------------------------------------- revision chain length
+
+  /** The level-0 of [[mkRepo]] plus `k` level-5 datasets. Dataset i inserts
+    * key 100+i, updates key 1 + (i-1) mod 4 (price + i), re-delivers key 6
+    * unchanged, and deletes the key the dataset before it inserted (5 for
+    * the first). Returns the repository and the expected final table.
+    */
+  private def mkRepoK(k: Int): (String, Map[Long, (String, Double)]) = {
+    val root = Files.createTempDirectory("graft-upload-k").toString
+    put(s"$root/level_0/20240101000000/ord.crs",
+      """TABLE orders
+        |COLUMN id bigint NOT NULL
+        |COLUMN v varchar NULL
+        |COLUMN price double NULL
+        |{CRS-DATA}
+        |1|a|10.0|
+        |2|b|20.0|
+        |3|c|30.0|
+        |4|d|40.0|
+        |5|e|50.0|
+        |6|f|60.0|
+        |""")
+    var table = Map[Long, (String, Double)](1L -> ("a", 10.0), 2L -> ("b", 20.0),
+      3L -> ("c", 30.0), 4L -> ("d", 40.0), 5L -> ("e", 50.0), 6L -> ("f", 60.0))
+    for (i <- 1 to k) {
+      val ds = f"$root/level_5/202401${i + 1}%02d000000"
+      val (ins, upd, del) = (100L + i, 1L + (i - 1) % 4, if (i == 1) 5L else 99L + i)
+      val updated = (table(upd)._1, table(upd)._2 + i)
+      put(s"$ds/xaud.crs",
+        s"""TABLE cbe_data
+          |COLUMN id integer NOT NULL
+          |COLUMN tablename varchar NOT NULL
+          |COLUMN tablekeyvalue integer NOT NULL
+          |COLUMN action char NOT NULL
+          |COLUMN timestamp datetime NOT NULL
+          |{CRS-DATA}
+          |1|orders|$ins|I|2024-01-02 00:00:01|
+          |2|orders|$upd|U|2024-01-02 00:00:01|
+          |3|orders|6|U|2024-01-02 00:00:01|
+          |4|orders|$del|D|2024-01-02 00:00:01|
+          |""")
+      put(s"$ds/ord.crs",
+        s"""TABLE orders
+          |COLUMN id bigint NOT NULL
+          |COLUMN v varchar NULL
+          |COLUMN price double NULL
+          |{CRS-DATA}
+          |$ins|n$i|${100.0 + i}|
+          |$upd|${updated._1}|${updated._2}|
+          |6|f|60.0|
+          |""")
+      table = table - del + (ins -> ((s"n$i", 100.0 + i))) + (upd -> updated)
+    }
+    (root, table)
+  }
+
+  test("each revision is one cached leaf: plans stay flat in the chain length") {
+    def leaves(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectLeaves().size
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val currentLeaves = for (k <- Seq(2, 6)) yield {
+      val (root, want) = mkRepoK(k)
+      val orders = Upload.run(spark, root, BdeConfig.parseTables(Config))("orders")
+      val got = orders.current.collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
+      assert(got == want, s"K=$k final table")
+      val bk = orders.bookkeeping.collect()
+        .map(r => r.getAs[String]("dataset") ->
+          ((r.getAs[Long]("n_insert"), r.getAs[Long]("n_update"),
+            r.getAs[Long]("n_null_update"), r.getAs[Long]("n_delete")))).toMap
+      assert(bk.size == k + 1 && bk("20240101000000") == ((6L, 0L, 0L, 0L)))
+      assert((bk - "20240101000000").values.forall(_ == ((1L, 1L, 1L, 1L))),
+        s"K=$k bookkeeping $bk")
+      val checks = orders.countChecks.collect()
+      assert(checks.length == k + 1 && checks.forall(r =>
+        r.getAs[Long]("expected_count") == 6L &&
+          r.getAs[Long]("actual_count") == 6L &&
+          r.getAs[String]("status") == "ok"), s"K=$k count checks")
+      assert(leaves(orders.versioned) == k + 1,
+        s"K=$k: versioned must read one leaf per revision")
+      // the leaves read their cached blocks through lineage: once the
+      // cache is dropped they recompute, where a localCheckpoint leaf fails
+      val (cur, ver) = (rows(orders.current), rows(orders.versioned))
+      spark.catalog.clearCache()
+      // the session is shared: drop Memo's now-uncached frames too, so a
+      // later suite rebuilds and re-caches them instead of recomputing
+      Memo.clear(spark)
+      assert(rows(orders.current) == cur && rows(orders.versioned) == ver,
+        s"K=$k: leaves must read back after the cache is dropped")
+      leaves(orders.current)
+    }
+    assert(currentLeaves.distinct.size == 1,
+      s"current's leaf count at K = 2, 6: $currentLeaves")
+  }
+
   test("job lock: single writer, stale locks broken, withLock releases") {
     val dir = Files.createTempDirectory("graft-lock").toString
     assert(JobLock.acquire(dir, "job-a", ttlMs = 60000))

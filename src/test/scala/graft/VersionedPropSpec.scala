@@ -36,6 +36,17 @@ class VersionedPropSpec extends SparkSpec {
     })
   }
 
+  test("property: a 3-dataset bracketed store equals the from-scratch rebuild") {
+    import graft.operators.DatasetRev
+    val dss = (1 to 3).map(i => s"2024010${i}000000")
+    val revOf = DatasetRev.revisionMap(dss)
+    check(Prop.forAll(Gen.listOfN(dss.size, snapGen)) { ms =>
+      val snaps = dss.zip(ms.map(df))
+      sameRows(DatasetRev.buildBracketed(snaps, revOf, "k"),
+        Versioned.build(snaps.map { case (d, f) => revOf(d) -> f }, "k"))
+    })
+  }
+
   test("property: atRevision reconstructs every input snapshot exactly") {
     check(Prop.forAll(snapGen, snapGen, snapGen) { (m1, m2, m3) =>
       val snaps = Seq(1 -> df(m1), 2 -> df(m2), 3 -> df(m3))
