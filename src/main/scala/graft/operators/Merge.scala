@@ -30,10 +30,21 @@ import org.apache.spark.sql.functions._
   */
 object Merge {
   val Action = "action"
+  /** Delta column: the struct of the row leaving `cur` (D/U/X), else null. */
+  val Leaving = "leaving"
+  /** Delta column: the struct of the row entering from `incoming` (I/U/X),
+    * else null.
+    */
+  val Entering = "entering"
 
   private def dataCols(cur: DataFrame, incoming: DataFrame, key: String): Seq[String] =
     cur.columns.toSeq.filter(c => c != key && incoming.columns.contains(c))
 
+  /** The one classify join every action derivation projects: each key of
+    * `cur` ∪ `incoming` with its action and both row images. Equality is
+    * judged on the columns both sides carry, so `cur` may carry extra
+    * columns (a revision stamp) that then travel in the leaving image.
+    */
   private def classify(cur: DataFrame, incoming: DataFrame, key: String,
                        uniqueCols: Seq[String]): DataFrame = {
     val cols = dataCols(cur, incoming, key)
@@ -45,36 +56,59 @@ object Merge {
     val uniqChanged: Column =
       if (uniqueCols.isEmpty) lit(false)
       else uniqueCols.map(x => !(col(s"c.$x") <=> col(s"i.$x"))).reduce(_ || _)
+    val action = when(col(s"i.$key").isNull, "D")
+      .when(col(s"c.$key").isNull, "I")
+      .when(allEq, "0")
+      .when(uniqChanged, "X")
+      .otherwise("U")
+    def image(side: String, cols: Array[String]): Column =
+      struct(cols.map(x => col(s"$side.$x").as(x)).toIndexedSeq: _*)
     c.join(i, col(s"c.$key") === col(s"i.$key"), "full_outer")
       .select(
         coalesce(col(s"c.$key"), col(s"i.$key")).as(key),
-        when(col(s"i.$key").isNull, "D")
-          .when(col(s"c.$key").isNull, "I")
-          .when(allEq, "0")
-          .when(uniqChanged, "X")
-          .otherwise("U")
-          .as(Action))
+        action.as(Action),
+        image("c", cur.columns).as(Leaving),
+        image("i", incoming.columns).as(Entering))
+      .select(col(key), col(Action),
+        when(col(Action).isin("D", "U", "X"), col(Leaving)).as(Leaving),
+        when(col(Action).isin("I", "U", "X"), col(Entering)).as(Entering))
   }
+
+  /** Level-0 incremental delta: every key of current ∪ snapshot with its
+    * action and the row images the apply moves — `leaving` from `cur` for
+    * D/U/X, `entering` from `snapshot` for I/U/X; both null for `0`.
+    */
+  def diffDelta(cur: DataFrame, snapshot: DataFrame, key: String,
+                uniqueCols: Seq[String] = Nil): DataFrame =
+    classify(cur, snapshot, key, uniqueCols)
 
   /** Level-0 incremental: classify every key of current ∪ snapshot.
     * Action `0` rows are retained so callers can count null updates.
     */
   def diffActions(cur: DataFrame, snapshot: DataFrame, key: String,
                   uniqueCols: Seq[String] = Nil): DataFrame =
-    classify(cur, snapshot, key, uniqueCols)
+    diffDelta(cur, snapshot, key, uniqueCols).select(col(key), col(Action))
 
-  /** Level-5: classification restricted to the announced change keys.
+  /** Level-5 delta: [[diffDelta]] restricted to the announced change keys.
     * Keys announced but present on neither side drop out (as in the
     * reference, where both joins come up empty).
     */
-  def changesetActions(cur: DataFrame, incoming: DataFrame, changeKeys: DataFrame,
-                       key: String, uniqueCols: Seq[String] = Nil): DataFrame = {
-    val keys = changeKeys.select(col(key)).distinct()
+  def changesetDelta(cur: DataFrame, incoming: DataFrame, changeKeys: DataFrame,
+                     key: String, uniqueCols: Seq[String] = Nil): DataFrame = {
+    // broadcast from the start: a plan that learns at run time that the
+    // key list is small has already shuffled the whole current table
+    val keys = broadcast(changeKeys.select(col(key)).distinct())
     classify(
       cur.join(keys, Seq(key), "left_semi"),
       incoming.join(keys, Seq(key), "left_semi"),
       key, uniqueCols)
   }
+
+  /** Level-5: classification restricted to the announced change keys. */
+  def changesetActions(cur: DataFrame, incoming: DataFrame, changeKeys: DataFrame,
+                       key: String, uniqueCols: Seq[String] = Nil): DataFrame =
+    changesetDelta(cur, incoming, changeKeys, key, uniqueCols)
+      .select(col(key), col(Action))
 
   /** `_bde_FixChangedIncKeyRecords`: current-table keys whose unique column
     * is claimed by an incoming image under a *different* key, and which the

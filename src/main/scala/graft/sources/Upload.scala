@@ -58,25 +58,43 @@ final case class ApplyEvent(
   *  2. for each configured table: load the newest level-0 that carries its
   *     files ([[BdeReader]] with the configured error policy);
   *  3. apply every later level-5 in name order — change keys from the
-  *     `l5_change_table` file, actions re-derived against the current
-  *     table ([[Merge.changesetActions]]), `level5_is_full` tables
-  *     re-diffed as snapshots ([[Merge.diffActions]]);
+  *     `l5_change_table` file, each key classified against the current
+  *     table ([[Merge.changesetDelta]]), `level5_is_full` tables re-diffed
+  *     as snapshots ([[Merge.diffDelta]]);
   *  4. record bookkeeping per apply and grade row counts against the
   *     table's configured tolerances;
-  *  5. keep every revision so the versioned store ([[Versioned.build]])
-  *     reconstructs any point in history.
+  *  5. record the versions each apply closed and opened, so the versioned
+  *     store reconstructs any point in history.
   *
-  * Scale: each apply is the operators' own single-shuffle plans; the only
-  * driver-side values are counts (bookkeeping metadata, as in the
-  * reference's event log). The start table and every applied revision are
-  * held as one cached leaf each ([[org.apache.spark.sql.CachedLeaf]]): the
-  * next apply's plan starts at that leaf, not at the chain of applies
-  * before it, so planning work per apply stays flat in the number of
-  * level-5 datasets K, and [[Versioned.build]] unions K+1 leaves — the
-  * Spark-side analog of `table_version` keeping each revision as stored
-  * data. Those K+1 caches per table are held until the session's cache is
-  * cleared (`spark.catalog.clearCache()`): `unpersist` on
-  * [[UploadedTable]]'s frames does not release them.
+  * Each apply is recorded as it happens, as `table_version` and
+  * `_bde_RecordDatasetLoaded` do in the reference: its classify join is
+  * held as one small cached **delta leaf** — each announced key's action
+  * with the row leaving the current table (D/U/X) and the row entering
+  * from the incoming file (I/U/X). The next revision is the current one
+  * without the leaving keys plus the entering rows; it carries an int
+  * `_ver_created` column (1 for the start table or seed, `r` for rows
+  * entering at apply `r`) that the frames handed to callers and hooks
+  * never show. After the loop, `versioned` is the union of every delta's
+  * leaving rows (`_ver_expired = r`) and the final revision's rows
+  * (`_ver_expired` null), in [[Versioned.build]]'s column order and types,
+  * and `bookkeeping` is [[Merge.bookkeeping]] over each delta's action
+  * column: nothing is re-stacked or classified a second time.
+  *
+  * Scale: each apply shuffles the current table once on the key and the
+  * announced keys' rows a few times; the only driver-side values are
+  * counts (bookkeeping metadata, as in the reference's event log).
+  * Revisions and deltas are held as one cached
+  * leaf each ([[org.apache.spark.sql.CachedLeaf]]), so the next apply's
+  * plan starts at a leaf, not at the chain of applies before it, and
+  * planning work per apply stays flat in the number of level-5 datasets K.
+  * Each revision's cache is released once the next one is materialized
+  * and the apply's hooks have run, so storage peaks near two revisions.
+  * What stays cached after a run, per table, is the final revision plus K
+  * delta leaves, until the session's cache is cleared
+  * (`spark.catalog.clearCache()`): `unpersist` on [[UploadedTable]]'s
+  * frames does not release them. A hook that keeps an [[ApplyEvent]]'s
+  * `previous` past its apply reads a released revision, which recomputes
+  * from its lineage.
   */
 object Upload {
 
@@ -207,31 +225,33 @@ object Upload {
     // only the newest matters (GetLevel5Updates keeps just the last)
     if (t.level5IsFull) later5 = later5.takeRight(1)
 
-    val (start, startN) = CachedLeaf(startCur)
-    val key = t.keyColumn.getOrElse(start.columns.head)
-    val keyType = start.schema(key).dataType
+    val schema = startCur.schema
+    val key = t.keyColumn.getOrElse(schema.fieldNames.head)
+    val keyType = schema(key).dataType
+    // the table's own columns: what callers, hooks and the reader see
+    def data(rev: DataFrame): DataFrame = rev.select(schema.fieldNames.map(col).toIndexedSeq: _*)
 
-    var cur = start
-    val snapshots = ListBuffer(1 -> start)
-    // a fresh level-0 load is all inserts (reference records it as such);
-    // a seed's applies were recorded by the run that published it, so a
-    // seeded run's bookkeeping starts empty (zero-row if nothing applies)
-    val books = ListBuffer.empty[DataFrame]
-    if (startLevel == 0)
-      books += Merge.bookkeeping(start.select(lit("I").as(Merge.Action)), startDs, t.name)
+    // the working revision carries the apply that opened each row; each
+    // cached revision is released once the next one is materialized
+    var revIn = startCur.withColumn(Versioned.Created, lit(1))
+    var (rev, before) = CachedLeaf(revIn)
+    val startN = before
     val startCheck =
       if (startLevel == 0) s"${t.name}@$startDs" else s"${t.name}@seed:$startDs"
     val checks = ListBuffer(Row(startCheck, startN, startN))
-    var before = startN
+    val deltas = ListBuffer.empty[(String, DataFrame)]
 
-    var lastEvent = ApplyEvent(t.name, startDs, startLevel, None, None, None, cur)
+    var lastEvent = ApplyEvent(t.name, startDs, startLevel, None, None, None, data(rev))
     if (startLevel == 0) (postApply ++ postLevel0).foreach(_(lastEvent))
 
     later5.foreach { ds =>
-      val incoming = BdeReader.read(spark, filesFor(ds, t),
-        Some(cur.schema), policy)
-      val actions =
-        if (t.level5IsFull) Merge.diffActions(cur, incoming, key)
+      val incoming = BdeReader.read(spark, filesFor(ds, t), Some(schema), policy)
+      // both leaves end at a shuffle on the key, where the lineage a task
+      // carries stops: a leaf whose last stage read the revision before it
+      // directly would make every later task carry all revisions' plans
+      // (1.4 MB per task at K = 4 without these two shuffles)
+      val deltaIn = ((
+        if (t.level5IsFull) Merge.diffDelta(rev, incoming, key)
         else {
           val keys = changeDef
             .map(cd => filesFor(ds, cd))
@@ -242,19 +262,27 @@ object Upload {
             }
             .getOrElse(incoming.select(col(key)))
             .select(col(key).cast(keyType).as(key))
-          Merge.changesetActions(cur, incoming, keys, key)
-        }
-      val (merged, bk) =
-        Merge.applyWithBookkeeping(cur, incoming, actions, key, ds.name, t.name)
-      val (next, after) = CachedLeaf(merged)
-      snapshots += (snapshots.size + 1) -> next
-      books += bk
+          Merge.changesetDelta(rev, incoming, keys, key)
+        }).repartition(col(key))).cache()
+      val r = deltas.size + 2
+      // one job materializes the delta and the next revision, so the
+      // revision's shuffle runs beside the classify join
+      val leaving = deltaIn.filter(col(Merge.Leaving).isNotNull).select(key)
+      val nextIn = rev.repartition(col(key)).join(leaving, Seq(key), "left_anti")
+        .unionByName(deltaIn.filter(col(Merge.Entering).isNotNull)
+          .select(col(s"${Merge.Entering}.*"))
+          .withColumn(Versioned.Created, lit(r)))
+      val (next, after) = CachedLeaf(nextIn)
+      val delta = CachedLeaf.leaf(deltaIn)
+      deltas += ds.name -> delta
       checks += Row(s"${t.name}@${ds.name}", before, after)
       before = after
-      lastEvent = ApplyEvent(t.name, ds.name, 5,
-        Some(cur), Some(incoming), Some(actions), next)
-      cur = next
+      lastEvent = ApplyEvent(t.name, ds.name, 5, Some(data(rev)), Some(incoming),
+        Some(delta.select(col(key), col(Merge.Action))), data(next))
       postApply.foreach(_(lastEvent))
+      revIn.unpersist()
+      revIn = nextIn
+      rev = next
     }
     postUpload.foreach(_(lastEvent))
     // grade every apply's (expected=before, actual=after) pair at once
@@ -262,10 +290,23 @@ object Upload {
       spark.createDataFrame(checks.asJava, ChecksSchema),
       warnTol = t.rowTolWarning.getOrElse(1.0),
       errTol = t.rowTolError.getOrElse(1.0))
-    // a seeded run with zero new datasets still reports a (zeroed)
-    // bookkeeping frame so the result shape is uniform
-    val book = books.reduceOption(_ unionByName _).getOrElse(
-      Merge.bookkeeping(cur.limit(0).select(lit("I").as(Merge.Action)), startDs, t.name))
-    UploadedTable(cur, Versioned.build(snapshots.toSeq, key), book, graded)
+    // a fresh level-0 load is all inserts (the reference records it as
+    // such); a seed's applies were recorded by the run that published it,
+    // so a seeded run's bookkeeping starts empty (zero-row if nothing applies)
+    def inserts(n: Long): DataFrame =
+      Merge.bookkeeping(spark.range(n).select(lit("I").as(Merge.Action)), startDs, t.name)
+    val books =
+      (if (startLevel == 0) Seq(inserts(startN)) else Nil) ++
+        deltas.map { case (ds, d) => Merge.bookkeeping(d.select(Merge.Action), ds, t.name) }
+    val book = books.reduceOption(_ unionByName _).getOrElse(inserts(0))
+    // history: every row an apply closed, then the rows still open — the
+    // column order and types of [[Versioned.build]]
+    val historyCols = (key +: schema.fieldNames.filter(_ != key).toSeq :+ Versioned.Created).map(col)
+    val closed = deltas.zipWithIndex.map { case ((_, d), i) =>
+      d.filter(col(Merge.Leaving).isNotNull).select(col(s"${Merge.Leaving}.*"))
+        .select(historyCols :+ lit(i + 2).as(Versioned.Expired): _*)
+    }
+    val open = rev.select(historyCols :+ lit(null).cast("int").as(Versioned.Expired): _*)
+    UploadedTable(data(rev), (closed :+ open).reduce(_ union _), book, graded)
   }
 }

@@ -15,9 +15,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * cache a plain `cache()` holds; and if those blocks are dropped, the RDD
   * recomputes them from lineage instead of failing the way a
   * `localCheckpoint` leaf does. The cache it reads belongs to the input
-  * frame: `unpersist` on the leaf does nothing, so a caller that drops the
-  * input frame holds the cache until the session's cache is cleared
-  * (`spark.catalog.clearCache()`).
+  * frame: `unpersist` on the leaf does nothing, so the caller releases the
+  * cache through the input frame (`df.unpersist()`, as
+  * [[graft.sources.Upload]] does for each revision it has moved past); a
+  * caller that drops the input frame holds the cache until the session's
+  * cache is cleared (`spark.catalog.clearCache()`). A leaf whose cache was
+  * released still reads, by recomputing from lineage.
   *
   * Lives in this package because `Dataset.ofRows` and
   * `LogicalRDD.fromDataset` are `private[sql]`.
@@ -26,12 +29,18 @@ object CachedLeaf {
 
   def apply(df: DataFrame): (DataFrame, Long) = {
     val n = df.cache().count()
+    (leaf(df), n)
+  }
+
+  /** The leaf over `df`'s cache, for a frame that is already cached and
+    * was materialized by another action (a job that read it); no job runs.
+    */
+  def leaf(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     // a fresh Dataset over the analyzed plan: its execution is planned now,
     // so it scans the cached relation even if `df`'s own plan predates it
     val cached = classic.Dataset.ofRows(ds.sparkSession, ds.logicalPlan)
-    val leaf = LogicalRDD.fromDataset(cached.queryExecution.toRdd, cached,
-      ds.isStreaming)
-    (classic.Dataset.ofRows(ds.sparkSession, leaf), n)
+    classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(cached.queryExecution.toRdd, cached, ds.isStreaming))
   }
 }

@@ -3,14 +3,20 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import graft.operators.Versioned
+import scala.util.Random
+
+import graft.operators.{Merge, Versioned}
 import graft.sources._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.sql.functions.lit
 
 /** End-to-end upload pipeline: repository discovery → level-0 load →
   * level-5 change applies → bookkeeping, count checks and revision history
   * — the reference's `ApplyUpdates` loop on synthetic BDE data.
   */
 class UploadSpec extends SparkSpec {
+  import UploadSpec._
 
   private def put(path: String, text: String): Unit = {
     val p = Paths.get(path)
@@ -129,7 +135,7 @@ class UploadSpec extends SparkSpec {
 
   test("hook-maintained aggregate tracks the table through the L5 apply") {
     val root = mkRepo()
-    var state: org.apache.spark.sql.DataFrame = null
+    var state: DataFrame = null
     val maintain: Upload.PostApplyHook = ev =>
       state =
         if (ev.level == 0) operators.Merge.aggState(ev.current, "v", "price")
@@ -308,11 +314,21 @@ class UploadSpec extends SparkSpec {
     (root, table)
   }
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  /** Row counts of every relation the session's cache holds. */
+  private def cachedRowCounts(): Seq[Long] = {
+    val cm = spark.sharedState.cacheManager
+    val entries = cm.getClass.getDeclaredMethod("cachedData")
+    entries.setAccessible(true)
+    entries.invoke(cm).asInstanceOf[IndexedSeq[CachedData]]
+      .map(_.cachedRepresentation.cacheBuilder.rowCountStats.value.longValue).toSeq
+  }
+
   test("each revision is one cached leaf: plans stay flat in the chain length") {
-    def leaves(df: org.apache.spark.sql.DataFrame): Int =
+    def leaves(df: DataFrame): Int =
       df.queryExecution.analyzed.collectLeaves().size
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     val currentLeaves = for (k <- Seq(2, 6)) yield {
       val (root, want) = mkRepoK(k)
       val orders = Upload.run(spark, root, BdeConfig.parseTables(Config))("orders")
@@ -333,6 +349,14 @@ class UploadSpec extends SparkSpec {
           r.getAs[String]("status") == "ok"), s"K=$k count checks")
       assert(leaves(orders.versioned) == k + 1,
         s"K=$k: versioned must read one leaf per revision")
+      if (k == 6) {
+        // what the run leaves cached: the final revision plus one delta per
+        // apply, each at most the 4 keys it announced, not K+1 revisions
+        val cached = cachedRowCounts()
+        assert(cached.sum <= want.size + 4L * k,
+          s"K=$k: cached relations hold ${cached.sum} rows ($cached), " +
+            s"expected at most ${want.size} + 4 x $k")
+      }
       // the leaves read their cached blocks through lineage: once the
       // cache is dropped they recompute, where a localCheckpoint leaf fails
       val (cur, ver) = (rows(orders.current), rows(orders.versioned))
@@ -346,6 +370,172 @@ class UploadSpec extends SparkSpec {
     }
     assert(currentLeaves.distinct.size == 1,
       s"current's leaf count at K = 2, 6: $currentLeaves")
+  }
+
+  // ------------------------------------------- history and bookkeeping
+
+  private def dsName(i: Int): String = f"202401${i + 1}%02d000000"
+
+  /** A random history of `k` level-5 datasets. Every dataset re-delivers a
+    * key unchanged, announces a key neither side holds, and moves a price
+    * to or from null; dataset 1 deletes key 1 and dataset 2 re-inserts it.
+    */
+  private def history(k: Int, rnd: Random): History = {
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    def img(): Img = (pick(Some("a"), Some("b"), None), pick(Some(1.5), Some(2.5), None))
+    def zones(): Map[Long, Option[String]] =
+      (1L to 5L).filter(_ => rnd.nextInt(3) > 0).map(_ -> pick(Some("n"), Some("m"), None)).toMap
+    var st = (2L to 8L).filter(_ => rnd.nextInt(4) > 0).map(_ -> img()).toMap + (1L -> img())
+    val orders0 = st
+    val steps = (1 to k).map { r =>
+      val random = (2L to 10L).filter(_ => rnd.nextInt(3) == 0)
+      val rest = st.keys.filterNot(k => k == 1L || random.contains(k)).toSeq.sorted
+      val same = rest.headOption.map(k => k -> st(k))
+      val nulled = rest.drop(1).headOption.map { k =>
+        val (v, p) = st(k)
+        k -> ((v, if (p.isEmpty) Some(9.5) else None))
+      }
+      val images = random.flatMap { k =>
+        pick(0, 1, 2, 3) match {
+          case 0 => None
+          case 1 if st.contains(k) => Some(k -> st(k))
+          case _ => Some(k -> img())
+        }
+      }.toMap ++ same ++ nulled ++ (if (r == 2) Some(1L -> img()) else None)
+      val announced = random ++ same.map(_._1) ++ nulled.map(_._1) ++
+        (if (r <= 2) Seq(1L) else Nil) :+ (100L + r)
+      st = st -- announced ++ images
+      Step(announced, images, zones())
+    }
+    History(keyFirst = k % 2 == 0, orders0, zones(), steps)
+  }
+
+  private def crs(table: String, cols: Seq[String], rows: Seq[Seq[Option[Any]]]): String =
+    ((s"TABLE $table" +: cols.map("COLUMN " + _) :+ "{CRS-DATA}") ++
+      rows.map(_.map(_.fold("\\N")(_.toString)).mkString("", "|", "|"))).mkString("", "\n", "\n")
+
+  private def orderCols(h: History): Seq[String] =
+    if (h.keyFirst) Seq("id bigint NOT NULL", "v varchar NULL", "price double NULL")
+    else Seq("v varchar NULL", "id bigint NOT NULL", "price double NULL")
+
+  private def orderRows(h: History, m: Map[Long, Img]): Seq[Seq[Option[Any]]] =
+    m.toSeq.sortBy(_._1).map { case (id, (v, p)) =>
+      if (h.keyFirst) Seq(Some(id), v, p) else Seq(v, Some(id), p)
+    }
+
+  private def zoneRows(m: Map[Long, Option[String]]): Seq[Seq[Option[Any]]] =
+    m.toSeq.sortBy(_._1).map { case (z, n) => Seq(Some(z), n) }
+
+  /** Write the level-0 and the first `until` level-5 datasets of `h`. */
+  private def writeRepo(h: History, until: Int): String = {
+    val root = Files.createTempDirectory("graft-upload-h").toString
+    val zoneCols = Seq("zid bigint NOT NULL", "name varchar NULL")
+    put(s"$root/level_0/${dsName(0)}/ord.crs", crs("orders", orderCols(h), orderRows(h, h.orders0)))
+    put(s"$root/level_0/${dsName(0)}/zon.crs", crs("zones", zoneCols, zoneRows(h.zones0)))
+    h.steps.take(until).zipWithIndex.foreach { case (d, i) =>
+      val dir = s"$root/level_5/${dsName(i + 1)}"
+      put(s"$dir/xaud.crs", crs("cbe_data",
+        Seq("id integer NOT NULL", "tablename varchar NOT NULL",
+          "tablekeyvalue integer NOT NULL", "action char NOT NULL",
+          "timestamp datetime NOT NULL"),
+        d.announced.zipWithIndex.map { case (key, n) =>
+          Seq(Some(n + 1), Some("orders"), Some(key), Some("U"), Some("2024-01-02 00:00:01"))
+        }))
+      put(s"$dir/ord.crs", crs("orders", orderCols(h), orderRows(h, d.images)))
+      put(s"$dir/zon.crs", crs("zones", zoneCols, zoneRows(d.zones)))
+    }
+    root
+  }
+
+  private val HistoryConfig = """
+    TABLE l5_change_table                   files xaud
+    TABLE orders  key=id                    files ord
+    TABLE zones   key=zid  l5_is_full       files zon
+  """
+
+  private def ordersDf(h: History, m: Map[Long, Img]): DataFrame = {
+    import spark.implicits._
+    val df = m.toSeq.map { case (id, (v, p)) => (id, v, p) }.toDF("id", "v", "price")
+    if (h.keyFirst) df else df.select("v", "id", "price")
+  }
+
+  private def zonesDf(m: Map[Long, Option[String]]): DataFrame = {
+    import spark.implicits._
+    m.toSeq.toDF("zid", "name")
+  }
+
+  private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.dtypes.toSeq == want.dtypes.toSeq, s"$what: column order and types")
+    assert(rows(got) == rows(want), s"$what: rows")
+  }
+
+  /** One upload run over datasets `from` to `until` of `h` — a fresh
+    * level-0 load when `from` is 0, else seeded from the run before — held
+    * against [[Versioned.build]] over the true snapshots and against
+    * bookkeeping over actions derived again by [[Merge.changesetActions]] /
+    * [[Merge.diffActions]].
+    */
+  private def checkRun(h: History, got: Map[String, UploadedTable], from: Int,
+                       until: Int, what: String): Unit = {
+    import spark.implicits._
+    val revs = from to until
+    val orders = got("orders")
+    // by name: the column order of `current` is pinned by its own test
+    val byName = (df: DataFrame) => df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+    assertSame(byName(orders.current), byName(ordersDf(h, h.orders(until))),
+      s"$what orders current")
+    assertSame(orders.versioned,
+      Versioned.build(revs.map(i => (i - from + 1) -> ordersDf(h, h.orders(i))), "id"),
+      s"$what orders versioned")
+    def inserts(df: DataFrame, ds: String, t: String): Seq[DataFrame] =
+      if (from == 0) Seq(Merge.bookkeeping(df.select(lit("I").as(Merge.Action)), ds, t))
+      else Nil
+    val orderBooks = inserts(ordersDf(h, h.orders0), dsName(0), "orders") ++
+      revs.tail.map { i =>
+        val d = h.steps(i - 1)
+        Merge.bookkeeping(Merge.changesetActions(ordersDf(h, h.orders(i - 1)),
+          ordersDf(h, d.images), d.announced.toDF("id"), "id"), dsName(i), "orders")
+      }
+    assertSame(orders.bookkeeping, orderBooks.reduce(_ unionByName _), s"$what orders bookkeeping")
+    // a full table applies only the newest snapshot
+    val zones = got("zones")
+    val zoneRevs = if (until > from) Seq(from, until) else Seq(from)
+    assertSame(zones.current, zonesDf(h.zones(until)), s"$what zones current")
+    assertSame(zones.versioned,
+      Versioned.build(zoneRevs.zipWithIndex.map { case (i, r) => (r + 1) -> zonesDf(h.zones(i)) }, "zid"),
+      s"$what zones versioned")
+    val zoneBooks = inserts(zonesDf(h.zones0), dsName(0), "zones") ++
+      zoneRevs.tail.map(i => Merge.bookkeeping(Merge.diffActions(
+        zonesDf(h.zones(from)), zonesDf(h.zones(i)), "zid"), dsName(i), "zones"))
+    assertSame(zones.bookkeeping, zoneBooks.reduce(_ unionByName _), s"$what zones bookkeeping")
+  }
+
+  test("versioned and bookkeeping equal the rebuild over the true snapshots") {
+    for (k <- 1 to 6) {
+      val h = history(k, new Random(7919L * k))
+      val cfg = BdeConfig.parseTables(HistoryConfig)
+      checkRun(h, Upload.run(spark, writeRepo(h, k), cfg), 0, k, s"K=$k")
+      if (k >= 2) {
+        // the same history in two runs: the second resumes from the
+        // state the first published
+        val j = k / 2
+        val first = Upload.run(spark, writeRepo(h, j), cfg)
+        val store = Files.createTempDirectory("graft-upload-h-store").toString
+        val seeds = Seq("orders", "zones").map { t =>
+          Upload.publishState(first(t).current, dsName(j), s"$store/$t")
+          t -> Upload.seedFrom(spark, s"$store/$t")
+        }.toMap
+        checkRun(h, Upload.run(spark, writeRepo(h, k), cfg, seeds = seeds), j, k,
+          s"K=$k seeded after $j")
+      }
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("current keeps the table's column order when the key is not first") {
+    val h = history(1, new Random(7919L))
+    val got = Upload.run(spark, writeRepo(h, 1), BdeConfig.parseTables(HistoryConfig))
+    assert(got("orders").current.columns.toSeq == Seq("v", "id", "price"))
   }
 
   test("job lock: single writer, stale locks broken, withLock releases") {
@@ -366,5 +556,25 @@ class UploadSpec extends SparkSpec {
     intercept[IllegalStateException] {
       JobLock.withLock(dir, "job-g")(0)
     }
+  }
+}
+
+object UploadSpec {
+  type Img = (Option[String], Option[Double])
+
+  /** One level-5 dataset of a random history: the `orders` keys it
+    * announces, the images it delivers for them, and the full `zones`
+    * snapshot it carries.
+    */
+  final case class Step(announced: Seq[Long], images: Map[Long, Img],
+                                zones: Map[Long, Option[String]])
+
+  final case class History(keyFirst: Boolean, orders0: Map[Long, Img],
+                                   zones0: Map[Long, Option[String]], steps: Seq[Step]) {
+    /** `orders` after each dataset, the level-0 first. */
+    val orders: Seq[Map[Long, Img]] = steps.scanLeft(orders0)((st, d) =>
+      st -- d.announced ++ d.images)
+    /** `zones` after each dataset, the level-0 first. */
+    val zones: Seq[Map[Long, Option[String]]] = zones0 +: steps.map(_.zones)
   }
 }

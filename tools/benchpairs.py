@@ -9,7 +9,10 @@ change won (by the metric's `better` direction), the change-vs-parent
 median ratio against the metric's bound, and each run's wall time and
 engine counters (`ops[].engine` medians from the results record). A
 metric whose parent spread (IQR / median) is wider than its bound is
-reported `unresolved`: the runs cannot tell a move of that size.
+reported `unresolved`: the runs cannot tell a move of that size. Each
+side's share of failed operations is reported; if any run failed an
+operation (`correct: false`), every verdict reads `FAILED` and the script
+exits 1, since timings of a run whose outputs were wrong compare nothing.
 
     git clone -q . /tmp/parent && git -C /tmp/parent checkout <parent-sha>
     python3 tools/benchpairs.py --parent /tmp/parent --change . \\
@@ -25,7 +28,8 @@ import subprocess
 import sys
 import time
 
-ENGINE = ("driver.gap_s", "driver.plan_s", "spark.jobs", "driver.heap_peak_mb")
+ENGINE = ("driver.gap_s", "driver.plan_s", "spark.jobs", "spark.stages",
+          "spark.task_s", "spark.shuffle_mb", "driver.heap_peak_mb")
 
 
 def quartiles(xs):
@@ -89,6 +93,12 @@ def main():
 
     print(f"\n{args.workload}: {args.pairs} alternating pairs, "
           f"seeds {args.seed}..{args.seed + args.pairs - 1}")
+    failed_share = {side: sum(r["failed"] for r in rs) /
+                    max(1, sum(r["attempted"] for r in rs))
+                    for side, rs in runs.items()}
+    any_failed = any(not r["correct"] for rs in runs.values() for r in rs)
+    print("failed_share: " + ", ".join(f"{side} {v:.3f}"
+                                       for side, v in failed_share.items()))
     print(f"{'metric':14s} {'parent med [q1, q3]':36s} "
           f"{'change med [q1, q3]':36s} {'ratio':>6s} {'wins':>5s} bound")
     verdict = {}
@@ -101,7 +111,8 @@ def main():
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
         worse = (ratio - 1) if lower else (1 - ratio)
         spread = (pq[2] - pq[0]) / pq[1] if pq[1] else float("inf")
-        status = ("unresolved" if spread > m["bound"]
+        status = ("FAILED" if any_failed
+                  else "unresolved" if spread > m["bound"]
                   else "ok" if worse <= m["bound"] else "WORSE")
         verdict[name] = {"parent": pq, "change": cq, "ratio": ratio,
                          "wins": wins, "bound": m["bound"],
@@ -119,7 +130,10 @@ def main():
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"workload": args.workload, "runs": runs,
-                       "verdict": verdict}, f, indent=1)
+                       "failed_share": failed_share, "verdict": verdict},
+                      f, indent=1)
+    if any_failed:
+        sys.exit("benchpairs: a run failed operations; see the ok=False lines")
 
 
 if __name__ == "__main__":
