@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,8 +53,8 @@ object AudioFp extends graft.GateModule {
   private[operators] val AudioFpMaxHamming = 3
 
   /** The 64-bit energy fingerprint of one clip's samples — shared by the
-    * codec path, the probe-only direct path and the spec's JVM-local
-    * expectation, so the three cannot drift.
+    * codec path and the specs' generator-side expectations, so they
+    * cannot drift.
     *
     * Bit k compares NEIGHBOURING window energies (energy(k) >
     * energy((k+1) mod 64)) — the chromaprint-style difference bit — not
@@ -91,18 +90,10 @@ object AudioFp extends graft.GateModule {
 
   /** Memoized per-clip fingerprint frame `(doc_id, hash_hi, hash_lo)` —
     * corpus clips plus the planted byte-copies — shared by the group,
-    * pair and cluster gates and the streaming maintainer. The
-    * SPARK_GRAFT_AUDIOFP_DIRECT escape hatch mirrors the phash family's:
-    * probe-only (refused by Verify/Bench via [[graft.ProbeFlags]]), it
-    * computes the IDENTICAL fingerprint from the sample generator so a
-    * 100× probe prices the dedup machinery, not the WAV codec constant;
-    * equality with the codec path is spec-pinned.
+    * pair and cluster gates and the streaming maintainer.
     */
   private[graft] def audioFpOf(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cachedLeaf(s, "audio_fp", dir) {
-      if (sys.env.contains("SPARK_GRAFT_AUDIOFP_DIRECT")) audioFpDirect(s, dir)
-      else audioFpCodec(s, dir)
-    }
+    graft.Memo.cachedLeaf(s, "audio_fp", dir)(audioFpCodec(s, dir))
 
   private[graft] def audioFpCodec(s: SparkSession, dir: String,
                                   batchSize: Int = 64): DataFrame = {
@@ -129,32 +120,6 @@ object AudioFp extends graft.GateModule {
             val (hi, lo) = fpOfSamples(samples)
             (id, hi, lo)
           }
-        }
-      }
-      .toDF("doc_id", "hash_hi", "hash_lo")
-  }
-
-  /** The fingerprint computed WITHOUT the codec — samples straight from
-    * the deterministic generator (the oracle's own arithmetic), same
-    * windows, same bit rule. Value-identical to [[audioFpCodec]] by WAV
-    * PCM losslessness (spec-pinned); exists so the 100× probe prices the
-    * near-dup machinery, not the codec.
-    */
-  private[graft] def audioFpDirect(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir).select(col("doc_id"))
-    docs.select(col("doc_id"), col("doc_id").as("src"))
-      .unionByName(docs.filter(col("doc_id") % PlantMod === 0)
-        .select((col("doc_id") + PlantShift).as("doc_id"),
-          col("doc_id").as("src")))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        it.map { case (id, src) =>
-          val gen = Multimodal.genOf(src)
-          val samples =
-            Array.tabulate(AudSamples)(i => Multimodal.sampleAt(gen, i))
-          val (hi, lo) = fpOfSamples(samples)
-          (id, hi, lo)
         }
       }
       .toDF("doc_id", "hash_hi", "hash_lo")

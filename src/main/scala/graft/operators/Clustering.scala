@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{CachedLeaf, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -420,17 +420,13 @@ object Clustering extends graft.GateModule {
         .withColumn(outCol, coalesce(col("lab2"), col("lab")))
         .drop("lab", "lab2")
     }
-    // eager checkpoint + fresh-leaf re-wrap (the [[SuffixArray]] barrier
-    // idiom): a bare checkpoint leaf CARRIES the join-compounded size
-    // estimate forward, and the chained flatten levels square it per
-    // level — measured 33 s of pure BigInt stats planning on the phash
-    // graph before the re-wrap. Every join in this loop broadcasts or
-    // salts EXPLICITLY, so nothing needs the estimate.
-    def leafCk(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
-    var e = leafCk(und)
+    // eager checkpoint leaves with no size estimate: a bare checkpoint leaf
+    // CARRIES the join-compounded size estimate forward, and the chained
+    // flatten levels square it per level — measured 33 s of pure BigInt
+    // stats planning on the phash graph before the estimate was dropped.
+    // Every join in this loop broadcasts or salts EXPLICITLY, so nothing
+    // needs the estimate.
+    var e = CachedLeaf.checkpoint(und)
     val e0 = e
     var ecount = e.count()
     val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -456,7 +452,7 @@ object Clustering extends graft.GateModule {
       // quadratically (measured: 5.4 s of pure driver planning on the
       // chain gate). |ptr| ≤ #contracted nodes ≤ ecount bounds the
       // broadcast decision.
-      var ptr = leafCk(ptr0)
+      var ptr = CachedLeaf.checkpoint(ptr0)
       held += ptr
       // composition count grows with the round index: cumulative
       // contraction after r rounds covers chains of Σ 2^(k+1) ≈ 2^(r+2)
@@ -469,7 +465,7 @@ object Clustering extends graft.GateModule {
         // ptr ∘ ptr: map each entry's TARGET through the same forest
         // (rename first — both sides carry lab/lab2)
         val tgt = ptr.select(col("lab").as("pa"), col("lab2").as("lab"))
-        ptr = leafCk(ap(tgt, "lab", ptr, ecount, "pb")
+        ptr = CachedLeaf.checkpoint(ap(tgt, "lab", ptr, ecount, "pb")
           .select(col("pa").as("lab"), col("pb").as("lab2")))
         held += ptr
       }
@@ -479,7 +475,7 @@ object Clustering extends graft.GateModule {
         .filter(col("s2") =!= col("d2"))
         .select(col("s2").as("src"), col("d2").as("dst"))
         .distinct()
-        .transform(leafCk)
+        .transform(CachedLeaf.checkpoint)
       labels = ap(labels, "lab", ptr, ecount, "labx")
         .withColumnRenamed("labx", "lab")
       // superseded edge frames must outlive the lazy label chain only if
@@ -489,8 +485,6 @@ object Clustering extends graft.GateModule {
       e = eNext
       ecount = e.count()
       if (eOld ne e0) eOld.unpersist(false)
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[ccjump] round=$round edges=$ecount")
     }
     val outCols = Seq(col("id"), col("lab").as(labName)) ++
       (if (withChg) Seq(lit(false).as("chg")) else Nil)

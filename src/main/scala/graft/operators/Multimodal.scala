@@ -122,9 +122,6 @@ object Multimodal extends graft.GateModule {
   private[graft] def genOf(id: Long): Long =
     if (id % ReImMod == ReImRes) id - ReImDelta else id
 
-  private[operators] def genCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(c % ReImMod === ReImRes, c - ReImDelta).otherwise(c)
-
   /** [[genOf]] as a DuckDB expression. */
   private[operators] def genSqlOf(id: String): String =
     s"CASE WHEN $id % $ReImMod = $ReImRes THEN $id - $ReImDelta ELSE $id END"
@@ -504,55 +501,9 @@ object Multimodal extends graft.GateModule {
                   batchSize: Int = 64): DataFrame =
     // memoized: the decoded frame is 7 narrow columns per doc, but the
     // codec pass behind it was re-paid by every consumer (the solo
-    // decode gate, both accounting gates, the composed audio pipeline).
-    // SPARK_GRAFT_AUDIO_DIRECT is the probe-only codec escape hatch
-    // (the phashesDirect pattern, refused by Verify/Bench): decode ∘
-    // encode is the identity on PCM, so the decoded frame is
-    // recomputable from the generator arithmetic — equality is
-    // spec-pinned, and a 100× probe prices the accounting machinery
-    // instead of 10^6 WAV container round-trips.
+    // decode gate, both accounting gates, the composed audio pipeline)
     graft.Memo.cachedLeaf(s, "audio_decoded", dir)(
-      if (sys.env.contains("SPARK_GRAFT_AUDIO_DIRECT"))
-        audioFramesDirect(s, dir, resampled = false)
-      else decodeAudioUncached(s, dir, batchSize))
-
-  /** The decoded (or decimated) audio frame computed WITHOUT the codec —
-    * samples straight from the deterministic generator, value-identical
-    * to the codec paths by WAV PCM losslessness (spec-pinned).
-    */
-  private[graft] def audioFramesDirect(s: SparkSession, dir: String,
-                                       resampled: Boolean): DataFrame = {
-    import s.implicits._
-    val stride = if (resampled) 2 else 1
-    val n = AudSamples / stride
-    val rate = AudRate.toInt / stride
-    val rows = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val gen = genOf(id)
-          var sum = 0L
-          val pcm = new Array[Byte](n * 2)
-          var i = 0
-          while (i < n) {
-            val v = sampleAt(gen, i * stride)
-            sum += v
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          (id, sum, md5hex(pcm))
-        }
-      }
-      .toDF("doc_id", "sample_sum", "pcm_md5")
-    if (!resampled)
-      rows.select(col("doc_id"), lit(rate).as("rate"),
-        lit(1).as("channels"), lit(16).as("bits"),
-        lit(n).as("n_samples"), col("sample_sum"), col("pcm_md5"))
-    else
-      rows.select(col("doc_id"), lit(n).as("out_samples"),
-        lit(rate).as("out_rate"), col("sample_sum").as("out_sample_sum"))
-        .orderBy("doc_id")
-  }
+      decodeAudioUncached(s, dir, batchSize))
 
   /** Spec accessors for the codec paths, bypassing the memo so the
     * equality spec compares genuinely independent builds.
@@ -626,12 +577,9 @@ object Multimodal extends graft.GateModule {
     */
   def resampleAudio(s: SparkSession, dir: String,
                     batchSize: Int = 64): DataFrame =
-    // memoized like decodeAudio — same multi-consumer codec pass, same
-    // probe-only escape hatch
+    // memoized like decodeAudio — same multi-consumer codec pass
     graft.Memo.cachedLeaf(s, "audio_resampled", dir)(
-      if (sys.env.contains("SPARK_GRAFT_AUDIO_DIRECT"))
-        audioFramesDirect(s, dir, resampled = true)
-      else resampleAudioUncached(s, dir, batchSize))
+      resampleAudioUncached(s, dir, batchSize))
 
   private def resampleAudioUncached(s: SparkSession, dir: String,
                                     batchSize: Int): DataFrame = {
@@ -727,12 +675,12 @@ object Multimodal extends graft.GateModule {
     * ties them at compile time instead of at gate runtime (advice
     * finding, r15).
     */
-  private[operators] val PlantShift = 100000L
+  private[graft] val PlantShift = 100000L
 
   /** Image-plant modulus: every [[PlantMod]]-th doc gets a
     * pixel-identical planted copy under id + [[PlantShift]].
     */
-  private[operators] val PlantMod = 9
+  private[graft] val PlantMod = 9
 
   /** Average-hash (aHash) image near-dup detection over the REAL decode
     * path: each PNG is decoded with `javax.imageio`, its 24×16 pixels
@@ -756,64 +704,8 @@ object Multimodal extends graft.GateModule {
     */
   private[graft] def phashesOf(s: SparkSession, dir: String,
                                    batchSize: Int = 64): DataFrame =
-    graft.Memo.cachedLeaf(s, "mm_phashes", dir) {
-      // probe-mode escape hatch: at 100× probe scale the per-image PNG
-      // encode+decode is a CODEC CONSTANT (embarrassingly parallel,
-      // already oracle+digest-gated at the correctness SFs) that buries
-      // the maintainer scaling the probe wants to measure — the flag
-      // swaps in [[phashesDirect]], which computes the IDENTICAL aHash
-      // from the pixel generator arithmetic (the oracle's own path;
-      // equality with the codec path is spec-pinned at sf0.001). Never
-      // set during verify/bench.
-      if (sys.env.contains("SPARK_GRAFT_PHASH_DIRECT"))
-        phashesDirect(s, dir)
-      else phashesCodec(s, dir, batchSize)
-    }
-
-  /** The aHash computed WITHOUT the codec — pixels straight from the
-    * deterministic generator (same arithmetic the SQL oracle uses),
-    * same block sums, same bit rule. Identical values to
-    * [[phashesCodec]] by PNG losslessness (spec-pinned); exists so the
-    * 100× scale probe prices the near-dup machinery, not the codec.
-    */
-  private[graft] def phashesDirect(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir).select(col("doc_id"))
-    docs.select(col("doc_id"), genCol(col("doc_id")).as("gen_id"))
-      .unionByName(docs.filter(col("doc_id") % PlantMod === 0)
-        .select((col("doc_id") + PlantShift).as("doc_id"),
-          genCol(col("doc_id")).as("gen_id")))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        it.map { case (id, gen) =>
-          val (bw, bh) = (ImgW / 8, ImgH / 8)
-          val bsum = new Array[Long](64)
-          var total = 0L
-          var y = 0
-          while (y < ImgH) {
-            var x = 0
-            while (x < ImgW) {
-              val lum = pixR(gen, x, y) + pixG(gen, x, y) + pixB(gen, x, y)
-              bsum(math.min(7, y / bh) * 8 + math.min(7, x / bw)) += lum
-              total += lum
-              x += 1
-            }
-            y += 1
-          }
-          var hi = 0L
-          var lo = 0L
-          var k = 0
-          while (k < 64) {
-            if (bsum(k) * 64L > total) {
-              if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
-            }
-            k += 1
-          }
-          (id, hi, lo)
-        }
-      }
-      .toDF("doc_id", "hash_hi", "hash_lo")
-  }
+    graft.Memo.cachedLeaf(s, "mm_phashes", dir)(
+      phashesCodec(s, dir, batchSize))
 
   private[graft] def phashesCodec(s: SparkSession, dir: String,
                                   batchSize: Int = 64): DataFrame = {

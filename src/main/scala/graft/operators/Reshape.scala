@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Exact, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{CachedLeaf, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table reshaping and series-completion operators: unpivot (the inverse
@@ -145,10 +145,7 @@ object Reshape extends graft.GateModule {
         col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment").as("segment"), col("o_custkey").as("ck"),
         col("recency"), col("frequency"), col("monetary"))
-    val rfm = {
-      val ck = rfm0.localCheckpoint()
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+    val rfm = CachedLeaf.checkpoint(rfm0)
     // DistRank orders ascend; the frequency/monetary quintiles rank
     // descending, expressed by exact negation (bigint count / decimal sum).
     // The three ranks are mutually INDEPENDENT (each orders the base rfm

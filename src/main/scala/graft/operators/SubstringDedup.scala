@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{CachedLeaf, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -169,10 +169,7 @@ object SubstringDedup extends graft.GateModule {
     // `rem` is removal-sized but its PLAN is the whole upstream strip
     // head, and three consumers read it (the affected set, the removal
     // counts, the anti-join) — materialize once.
-    val remM = {
-      val ck = rem.localCheckpoint()
-      ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+    val remM = CachedLeaf.checkpoint(rem)
     // NO broadcast hint on the affected set: it is data-dependent and
     // unbounded — on a heavily duplicated corpus (the exact target of a
     // substring strip) it can approach corpus size, and a forced

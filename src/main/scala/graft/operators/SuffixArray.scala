@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Memo
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{CachedLeaf, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,9 +32,9 @@ import org.apache.spark.sql.functions._
   *     shuffle keyed by the rank tuple, and ⌈log4 maxlen⌉ rounds finish
   *     the order.
   *
-  * Every round materializes through [[barrier]] and caches its pair
-  * frame for the round's two consumers (the boundary pick and the rank
-  * join — left uncached each would re-evaluate the joins), and the round
+  * Every round materializes through [[CachedLeaf.checkpoint]] and caches
+  * its pair frame for the round's two consumers (the boundary pick and the
+  * rank join — left uncached each would re-evaluate the joins), and the round
   * tables are memoized per (session, dir) — `suffix_array` and
   * `suffix_maxmatch` share them, as production would share the built
   * index. Identical suffixes (the planted cross-document copies) share a
@@ -139,22 +139,6 @@ object SuffixArray extends graft.GateModule {
       .select(col("doc_id"), (col("p0") + 1).as("p"), col("tok"))
   }
 
-  /** Eager local checkpoint + fresh-leaf re-wrap. A bare localCheckpoint
-    * leaf CARRIES the original plan's size estimate forward (Spark
-    * preserves stats through checkpoints), so chained rounds COMPOUND the
-    * estimate — each round squares it through its joins, the digits
-    * double per round, and within a few rounds Catalyst's BigInt stats
-    * arithmetic dominates wall-clock (measured: minutes of pure
-    * SizeInBytesOnlyStatsPlanVisitor under AQE). Re-wrapping the
-    * checkpointed RDD resets the leaf's stats; every join that must
-    * broadcast is explicitly hinted, so nothing downstream needs the
-    * estimate.
-    */
-  private def barrier(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** Dense rank of `df` over `keys` (ascending) — the direct
     * [[DistRank.denseRank]] (slice-local dense_rank + distinct-count
     * offsets), value-identical to the former row_number-over-distinct
@@ -204,10 +188,13 @@ object SuffixArray extends graft.GateModule {
       paired = paired.withColumn(s"t$i",
         coalesce(lead(col("tok"), i * o).over(w), lit(pad)))
     // three passes read the pair frame (boundary sample, slice totals,
-    // the ranked window); cache for the round, release once the barrier
-    // materialized
+    // the ranked window); cache for the round, release once the checkpoint
+    // materialized. The round table carries NO size estimate: with a bare
+    // localCheckpoint the chained rounds squared it through their joins
+    // (measured: minutes of pure SizeInBytesOnlyStatsPlanVisitor under
+    // AQE); every join that must broadcast is explicitly hinted.
     val shared = paired.cache()
-    val out = barrier(
+    val out = CachedLeaf.checkpoint(
       denseRank(shared, keys, "rn")
         .select(col("doc_id"), col("p"), col("rn").as("r")))
     shared.unpersist(false)
@@ -440,7 +427,7 @@ object SuffixArray extends graft.GateModule {
     * remaining LCP starts < cover_R ≥ maxLen), hence at most three
     * cover-sized extensions per stage — one probe join — and a final
     * ≤ 3-token refinement against the raw token table finishes exact.
-    * Each stage [[barrier]]s so the R-stage chain stays flat for
+    * Each stage is a checkpoint leaf so the R-stage chain stays flat for
     * Catalyst.
     */
   private def lcpOfRounds(grp: DataFrame, rank: Int => DataFrame,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize an F×-replicated copy of a testdata directory for
-  * scale probes (`TimeQuery` at ~sf1 from the sf0.1 input).
+  * scale probes (`Probe time` at ~sf1 from the sf0.1 input).
   *
   * Replication must keep per-query work LINEAR in F for the probe to be
   * meaningful, so replicas are decorrelated, not cloned:

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Hold a frame as one cached leaf: `cache()` it, materialize it with one
@@ -22,8 +23,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * cache is cleared (`spark.catalog.clearCache()`). A leaf whose cache was
   * released still reads, by recomputing from lineage.
   *
-  * Lives in this package because `Dataset.ofRows` and
-  * `LogicalRDD.fromDataset` are `private[sql]`.
+  * Lives in this package because `Dataset.ofRows`,
+  * `LogicalRDD.fromDataset` and `DataTypeUtils` are `private[sql]`.
   */
 object CachedLeaf {
 
@@ -43,4 +44,31 @@ object CachedLeaf {
     classic.Dataset.ofRows(ds.sparkSession,
       LogicalRDD.fromDataset(cached.queryExecution.toRdd, cached, ds.isStreaming))
   }
+
+  /** Materialize `df` with an eager `localCheckpoint` and hand back a
+    * `LogicalRDD` over the checkpointed rows with fresh attributes, no
+    * origin statistics and unknown partitioning. Its `sizeInBytes` is
+    * `spark.sql.defaultSizeInBytes`: a bare checkpoint leaf carries the
+    * build plan's size estimate forward, and a loop that joins such
+    * leaves round after round compounds that estimate until Catalyst's
+    * BigInt statistics arithmetic dominates planning. Callers hint every
+    * broadcast they need, so nothing downstream reads the estimate.
+    *
+    * Unlike the cached leaf above, the rows live only in the executors'
+    * block stores: a leaf whose blocks are lost cannot be recomputed.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint().asInstanceOf[classic.Dataset[Row]]
+    val rdd = ck.logicalPlan.asInstanceOf[LogicalRDD].rdd
+    classic.Dataset.ofRows(ck.sparkSession,
+      LogicalRDD(DataTypeUtils.toAttributes(ck.schema), rdd)(ck.sparkSession))
+  }
+}
+
+/** Listener-bus access for the probes: `waitUntilEmpty` is `private[spark]`. */
+object ListenerBus {
+
+  /** Block until every event posted so far has reached every listener. */
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -137,7 +138,7 @@ class Round16OpsSpec extends SparkSpec {
   test("phashesDirect equals the codec path exactly (PNG losslessness " +
     "end to end) — the probe-mode hash source cannot drift") {
     val M = operators.Multimodal
-    val direct = M.phashesDirect(spark, sf).collect()
+    val direct = Round16OpsSpec.phashesDirect(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     val codec = M.phashesCodec(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -247,5 +248,48 @@ class Round16OpsSpec extends SparkSpec {
       .head()
     assert(stats.getAs[Long]("nb") == 4L)
     assert(stats.getAs[Long]("mx") <= operators.Similarity.OccBound)
+  }
+}
+
+object Round16OpsSpec {
+
+  /** The aHash computed WITHOUT the codec — each document's pixels straight
+    * from the generator ([[operators.Multimodal.rgbBytes]]), same 8×8
+    * grid of block luma sums, same bit rule as
+    * [[operators.Multimodal.phashesCodec]], over the corpus plus the
+    * planted copies. Identical to the codec path by PNG losslessness.
+    */
+  def phashesDirect(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val M = operators.Multimodal
+    val docs = Tables.documents(s, dir).select(col("doc_id"))
+    docs.select(col("doc_id"), col("doc_id").as("src"))
+      .unionByName(docs.filter(col("doc_id") % M.PlantMod === 0)
+        .select((col("doc_id") + M.PlantShift).as("doc_id"),
+          col("doc_id").as("src")))
+      .as[(Long, Long)]
+      .map { case (id, src) =>
+        val (hi, lo) = aHash(operators.Multimodal.rgbBytes(src))
+        (id, hi, lo)
+      }
+      .toDF("doc_id", "hash_hi", "hash_lo")
+  }
+
+  private def aHash(rgb: Array[Byte]): (Long, Long) = {
+    val (w, h) = (operators.Multimodal.ImgW, operators.Multimodal.ImgH)
+    val (bw, bh) = (w / 8, h / 8)
+    val bsum = new Array[Long](64)
+    var total = 0L
+    for (y <- 0 until h; x <- 0 until w) {
+      val i = 3 * (y * w + x)
+      val lum = (rgb(i) & 0xff) + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)
+      bsum(math.min(7, y / bh) * 8 + math.min(7, x / bw)) += lum
+      total += lum
+    }
+    var (hi, lo) = (0L, 0L)
+    for (k <- 0 until 64 if bsum(k) * 64L > total) {
+      if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
+    }
+    (hi, lo)
   }
 }

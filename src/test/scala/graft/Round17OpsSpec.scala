@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.PipelineMedia.{Audio, Image, fullLoad, incremental}
 
@@ -53,7 +54,7 @@ class Round17OpsSpec extends SparkSpec {
     "losslessness end to end) — the probe-mode fingerprint source " +
     "cannot drift") {
     val A = operators.AudioFp
-    val direct = A.audioFpDirect(spark, sf).collect()
+    val direct = Round17OpsSpec.audioFpDirect(spark, sf).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val codec = A.audioFpCodec(spark, sf).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
@@ -68,11 +69,11 @@ class Round17OpsSpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row): (Long, String) =
       (r.getAs[Long]("doc_id"), r.toString)
     val dc = M.decodeAudioUncachedForSpec(spark, sf).collect().map(key).sorted
-    val dd = M.audioFramesDirect(spark, sf, resampled = false)
+    val dd = Round17OpsSpec.audioFramesDirect(spark, sf, resampled = false)
       .collect().map(key).sorted
     assert(dc.toSeq == dd.toSeq)
     val rc = M.resampleAudioUncachedForSpec(spark, sf).collect().map(key).sorted
-    val rd = M.audioFramesDirect(spark, sf, resampled = true)
+    val rd = Round17OpsSpec.audioFramesDirect(spark, sf, resampled = true)
       .collect().map(key).sorted
     assert(rc.toSeq == rd.toSeq)
   }
@@ -214,5 +215,70 @@ class Round17OpsSpec extends SparkSpec {
     // actually drop someone (plants + re-crawls)
     assert(d(0, "planted") > 0)
     assert(rows(2).getAs[Long]("docs_dropped") > 0)
+  }
+}
+
+object Round17OpsSpec {
+
+  /** Each document's clip samples straight from the generator
+    * ([[operators.Multimodal.pcmBytes]], little-endian 16-bit PCM).
+    */
+  private def samplesOf(id: Long): Array[Int] = {
+    val pcm = operators.Multimodal.pcmBytes(id)
+    Array.tabulate(pcm.length / 2)(i =>
+      ((pcm(2 * i) & 0xff) | (pcm(2 * i + 1).toInt << 8)).toShort.toInt)
+  }
+
+  /** The fingerprint computed WITHOUT the codec — generator samples, same
+    * windows, same bit rule ([[operators.AudioFp.fpOfSamples]]), over the
+    * corpus plus the planted copies. Identical to
+    * [[operators.AudioFp.audioFpCodec]] by WAV PCM losslessness.
+    */
+  def audioFpDirect(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val M = operators.Multimodal
+    val docs = Tables.documents(s, dir).select(col("doc_id"))
+    docs.select(col("doc_id"), col("doc_id").as("src"))
+      .unionByName(docs.filter(col("doc_id") % M.PlantMod === 0)
+        .select((col("doc_id") + M.PlantShift).as("doc_id"),
+          col("doc_id").as("src")))
+      .as[(Long, Long)]
+      .map { case (id, src) =>
+        val (hi, lo) = operators.AudioFp.fpOfSamples(samplesOf(src))
+        (id, hi, lo)
+      }
+      .toDF("doc_id", "hash_hi", "hash_lo")
+  }
+
+  /** The decoded (or decimated) audio frame computed WITHOUT the codec —
+    * generator samples (every other one when `resampled`), in the column
+    * layout of `decodeAudio` (or `resampleAudio`).
+    */
+  def audioFramesDirect(s: SparkSession, dir: String,
+                        resampled: Boolean): DataFrame = {
+    import s.implicits._
+    val M = operators.Multimodal
+    val stride = if (resampled) 2 else 1
+    val n = M.AudSamples / stride
+    val rate = M.AudRate.toInt / stride
+    val rows = Tables.documents(s, dir).select(col("doc_id")).as[Long]
+      .map { id =>
+        val kept = samplesOf(id).zipWithIndex
+          .collect { case (v, i) if i % stride == 0 => v }
+        val pcm = kept.flatMap(v => Array((v & 0xff).toByte,
+          ((v >> 8) & 0xff).toByte))
+        val md5 = java.security.MessageDigest.getInstance("MD5")
+          .digest(pcm).map("%02x".format(_)).mkString
+        (id, kept.map(_.toLong).sum, md5)
+      }
+      .toDF("doc_id", "sample_sum", "pcm_md5")
+    if (!resampled)
+      rows.select(col("doc_id"), lit(rate).as("rate"),
+        lit(1).as("channels"), lit(16).as("bits"),
+        lit(n).as("n_samples"), col("sample_sum"), col("pcm_md5"))
+    else
+      rows.select(col("doc_id"), lit(n).as("out_samples"),
+        lit(rate).as("out_rate"), col("sample_sum").as("out_sample_sum"))
+        .orderBy("doc_id")
   }
 }
