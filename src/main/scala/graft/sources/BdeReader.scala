@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 
 /** Distributed BDE (.crs / .crs.gz) reader over the Hadoop FileSystem API
   * (local paths, HDFS and object stores all resolve through the driver's
-  * Hadoop configuration, shipped to tasks via [[SerializableHadoopConf]]).
+  * Hadoop configuration, broadcast to tasks as a [[SerializableHadoopConf]]).
   *
   * Parallelism unit = file, matching the reference pipeline where each BDE
   * file is one load stream (gzip is unsplittable anyway). Each task parses
@@ -98,8 +98,12 @@ object BdeReader {
            schema: Option[StructType] = None,
            policy: BdeErrorPolicy = BdeErrorPolicy()): DataFrame = {
     require(paths.nonEmpty, "no BDE files given")
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val target = schema.getOrElse(header(paths.head, hconf.value).schema)
+    val sc = spark.sparkContext
+    // broadcast, not captured: a task ships its RDD's whole lineage, and a
+    // cached frame read from these files would otherwise carry the full
+    // Hadoop configuration (about 100 KB) into every task that reads it
+    val hconf = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
+    val target = schema.getOrElse(header(paths.head, sc.hadoopConfiguration).schema)
     val targetFields = target.fields
     val nErrors = spark.sparkContext.longAccumulator("bde_data_errors")
     val nWarnings = spark.sparkContext.longAccumulator("bde_data_warnings")
@@ -108,7 +112,7 @@ object BdeReader {
       .parallelize(paths, paths.length)
       .flatMap { p =>
         import BdeErrorAction._
-        val reader = open(hconf.value, p)
+        val reader = open(hconf.value.value, p)
         val lines = Iterator.continually(reader.readLine())
           .takeWhile(l => l != null || { reader.close(); false })
         // one streaming pass: parseHeader consumes through the data marker,

@@ -1,5 +1,6 @@
 package graft.sources
 
+import scala.collection.mutable
 import scala.collection.mutable.ListBuffer
 import scala.jdk.CollectionConverters._
 
@@ -58,7 +59,8 @@ final case class ApplyEvent(
   *  2. for each configured table: load the newest level-0 that carries its
   *     files ([[BdeReader]] with the configured error policy);
   *  3. apply every later level-5 in name order — change keys from the
-  *     `l5_change_table` file, each key classified against the current
+  *     `l5_change_table` file (parsed once per run and dataset, whatever
+  *     the number of tables), each key classified against the current
   *     table ([[Merge.changesetDelta]]), `level5_is_full` tables re-diffed
   *     as snapshots ([[Merge.diffDelta]]);
   *  4. record bookkeeping per apply and grade row counts against the
@@ -80,21 +82,28 @@ final case class ApplyEvent(
   * and `bookkeeping` is [[Merge.bookkeeping]] over each delta's action
   * column: nothing is re-stacked or classified a second time.
   *
-  * Scale: each apply shuffles the current table once on the key and the
-  * announced keys' rows a few times; the only driver-side values are
+  * Scale: a level-5 changeset touches only the keys it announces, as
+  * `bde_ApplyLevel5Update` does. Before the loop, the start table (the
+  * level-0 or the seed) is cached once with a `_touched` column: whether a
+  * later dataset announces the row's key. The applies run on the touched
+  * rows only (the slice), so an apply shuffles the slice and the announced
+  * keys' rows, never the whole table, and a revision is the untouched
+  * start rows plus the applied slice. A `level5_is_full` table (one
+  * snapshot diff, which classifies every key) and a table with no later
+  * dataset work on the whole table. The only driver-side values are
   * counts (bookkeeping metadata, as in the reference's event log).
-  * Revisions and deltas are held as one cached
+  * The start, each applied slice and each delta are held as one cached
   * leaf each ([[org.apache.spark.sql.CachedLeaf]]), so the next apply's
   * plan starts at a leaf, not at the chain of applies before it, and
   * planning work per apply stays flat in the number of level-5 datasets K.
-  * Each revision's cache is released once the next one is materialized
-  * and the apply's hooks have run, so storage peaks near two revisions.
-  * What stays cached after a run, per table, is the final revision plus K
-  * delta leaves, until the session's cache is cleared
-  * (`spark.catalog.clearCache()`): `unpersist` on [[UploadedTable]]'s
-  * frames does not release them. A hook that keeps an [[ApplyEvent]]'s
-  * `previous` past its apply reads a released revision, which recomputes
-  * from its lineage.
+  * Each slice's cache is released once the next one is materialized and
+  * the apply's hooks have run, so storage holds one copy of the table plus
+  * at most two slices. What stays cached after a run, per table, is the
+  * start, the final slice and K delta leaves, until the session's cache
+  * is cleared (`spark.catalog.clearCache()`): `unpersist` on
+  * [[UploadedTable]]'s frames does not release them. A hook that keeps an
+  * [[ApplyEvent]]'s `previous` past its apply reads a released slice,
+  * which recomputes from its lineage.
   */
 object Upload {
 
@@ -176,11 +185,29 @@ object Upload {
     val conf = spark.sparkContext.hadoopConfiguration
     val datasets = BdeRepository.datasets(repoRoot, conf)
     val changeDef = tables.find(_.levels.contains("C"))
-    tables.filterNot(_.levels.contains("C"))
-      .map(t => t.name -> runTable(spark, datasets, t, changeDef, policy,
+    // a dataset's change table is shared by every table it announces keys
+    // for: it is parsed once, on first use, cached as the small
+    // (tablename, tablekeyvalue) frame each table filters, and read through
+    // a leaf, so the plans that read it twice reuse one exchange over it
+    val changeTables = mutable.Map.empty[String, Option[(DataFrame, DataFrame)]]
+    def changeTable(ds: BdeRepository.Dataset): Option[DataFrame] =
+      changeTables.getOrElseUpdate(ds.name, changeDef
+        .map(filesFor(ds, _)).filter(_.nonEmpty)
+        .map { fs =>
+          val ct = BdeReader.read(spark, fs, None, policy)
+            .select("tablename", "tablekeyvalue").cache()
+          ct -> CachedLeaf.leaf(ct)
+        }).map(_._2)
+    try tables.filterNot(_.levels.contains("C"))
+      .map(t => t.name -> runTable(spark, datasets, t, changeTable, policy,
         postApply, postLevel0, postUpload, seeds.get(t.name)))
       .toMap
+    // every delta already holds its keys' rows: nothing returned reads these
+    finally changeTables.values.flatten.foreach(_._1.unpersist())
   }
+
+  /** Start-leaf column: whether a later dataset announces the row's key. */
+  private val Touched = "_touched"
 
   private val ChecksSchema = StructType(Seq(
     StructField("check_name", StringType, false),
@@ -188,7 +215,8 @@ object Upload {
     StructField("actual_count", LongType, false)))
 
   private def runTable(spark: SparkSession, datasets: Seq[BdeRepository.Dataset],
-                       t: BdeTableDef, changeDef: Option[BdeTableDef],
+                       t: BdeTableDef,
+                       changeTable: BdeRepository.Dataset => Option[DataFrame],
                        policy: BdeErrorPolicy,
                        postApply: Seq[PostApplyHook] = Nil,
                        postLevel0: Seq[PostApplyHook] = Nil,
@@ -230,40 +258,67 @@ object Upload {
     val keyType = schema(key).dataType
     // the table's own columns: what callers, hooks and the reader see
     def data(rev: DataFrame): DataFrame = rev.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val later = later5.map(ds => ds -> BdeReader.read(spark, filesFor(ds, t), Some(schema), policy))
+    // the keys a level-5 dataset announces for this table: its change
+    // table's, or every key of its incoming file when it carries none
+    // (with repeats: each consumer takes the distinct keys once)
+    def announced(ds: BdeRepository.Dataset, incoming: DataFrame): DataFrame =
+      changeTable(ds)
+        .map(_.filter(col("tablename") === t.name).select(col("tablekeyvalue").as(key)))
+        .getOrElse(incoming.select(col(key)))
+        .select(col(key).cast(keyType).as(key))
 
-    // the working revision carries the apply that opened each row; each
-    // cached revision is released once the next one is materialized
-    var revIn = startCur.withColumn(Versioned.Created, lit(1))
-    var (rev, before) = CachedLeaf(revIn)
-    val startN = before
+    // the working revision carries the apply that opened each row. A
+    // changeset touches only its announced keys, so the start is cached
+    // once, flagged where a later dataset announces the row's key, and the
+    // applies run on the touched rows (the slice); the untouched rows stay
+    // in the start leaf. A full snapshot re-diffs every key: its applies
+    // run on the whole table.
+    val startIn = startCur.withColumn(Versioned.Created, lit(1))
+    val (untouched, first, untouchedN, firstN) =
+      if (t.level5IsFull || later.isEmpty) {
+        val (start, n) = CachedLeaf(startIn)
+        (None, start, 0L, n)
+      } else {
+        val touched = later.map((announced _).tupled).reduce(_ union _).distinct()
+          .withColumn(Touched, lit(true))
+        val flagged = startIn.join(broadcast(touched), Seq(key), "left")
+          .select(startIn.columns.map(col).toIndexedSeq :+
+            coalesce(col(Touched), lit(false)).as(Touched): _*)
+          .cache()
+        // one job materializes the start and counts both of its parts
+        val n = flagged.groupBy(Touched).count().collect()
+          .map(r => r.getBoolean(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+        val start = CachedLeaf.leaf(flagged)
+        (Some(start.filter(!col(Touched)).drop(Touched)),
+          start.filter(col(Touched)).drop(Touched), n(false), n(true))
+      }
+    // a whole revision: the untouched rows plus the applied slice
+    def whole(rev: DataFrame): DataFrame = untouched.fold(rev)(_.unionByName(rev))
+    // each cached revision is released once the next one is materialized;
+    // the first slice reads the start leaf, which stays cached, so releasing
+    // it frees nothing
+    var revIn = if (untouched.isEmpty) startIn else first
+    var rev = first
+    val startN = untouchedN + firstN
+    var before = startN
     val startCheck =
       if (startLevel == 0) s"${t.name}@$startDs" else s"${t.name}@seed:$startDs"
     val checks = ListBuffer(Row(startCheck, startN, startN))
     val deltas = ListBuffer.empty[(String, DataFrame)]
 
-    var lastEvent = ApplyEvent(t.name, startDs, startLevel, None, None, None, data(rev))
+    var lastEvent = ApplyEvent(t.name, startDs, startLevel, None, None, None, data(whole(rev)))
     if (startLevel == 0) (postApply ++ postLevel0).foreach(_(lastEvent))
 
-    later5.foreach { ds =>
-      val incoming = BdeReader.read(spark, filesFor(ds, t), Some(schema), policy)
+    later.foreach { case (ds, incoming) =>
       // both leaves end at a shuffle on the key, where the lineage a task
       // carries stops: a leaf whose last stage read the revision before it
       // directly would make every later task carry all revisions' plans
       // (1.4 MB per task at K = 4 without these two shuffles)
       val deltaIn = ((
         if (t.level5IsFull) Merge.diffDelta(rev, incoming, key)
-        else {
-          val keys = changeDef
-            .map(cd => filesFor(ds, cd))
-            .filter(_.nonEmpty)
-            .map { fs =>
-              val ct = BdeReader.read(spark, fs, None, policy)
-              Merge.changeKeysFromChangeTable(ct, t.name, key)
-            }
-            .getOrElse(incoming.select(col(key)))
-            .select(col(key).cast(keyType).as(key))
-          Merge.changesetDelta(rev, incoming, keys, key)
-        }).repartition(col(key))).cache()
+        else Merge.changesetDelta(rev, incoming, announced(ds, incoming), key)
+        ).repartition(col(key))).cache()
       val r = deltas.size + 2
       // one job materializes the delta and the next revision, so the
       // revision's shuffle runs beside the classify join
@@ -272,13 +327,14 @@ object Upload {
         .unionByName(deltaIn.filter(col(Merge.Entering).isNotNull)
           .select(col(s"${Merge.Entering}.*"))
           .withColumn(Versioned.Created, lit(r)))
-      val (next, after) = CachedLeaf(nextIn)
+      val (next, nextN) = CachedLeaf(nextIn)
       val delta = CachedLeaf.leaf(deltaIn)
       deltas += ds.name -> delta
+      val after = untouchedN + nextN
       checks += Row(s"${t.name}@${ds.name}", before, after)
       before = after
-      lastEvent = ApplyEvent(t.name, ds.name, 5, Some(data(rev)), Some(incoming),
-        Some(delta.select(col(key), col(Merge.Action))), data(next))
+      lastEvent = ApplyEvent(t.name, ds.name, 5, Some(data(whole(rev))), Some(incoming),
+        Some(delta.select(col(key), col(Merge.Action))), data(whole(next)))
       postApply.foreach(_(lastEvent))
       revIn.unpersist()
       revIn = nextIn
@@ -306,7 +362,7 @@ object Upload {
       d.filter(col(Merge.Leaving).isNotNull).select(col(s"${Merge.Leaving}.*"))
         .select(historyCols :+ lit(i + 2).as(Versioned.Expired): _*)
     }
-    val open = rev.select(historyCols :+ lit(null).cast("int").as(Versioned.Expired): _*)
-    UploadedTable(data(rev), (closed :+ open).reduce(_ union _), book, graded)
+    val open = whole(rev).select(historyCols :+ lit(null).cast("int").as(Versioned.Expired): _*)
+    UploadedTable(data(whole(rev)), (closed :+ open).reduce(_ union _), book, graded)
   }
 }

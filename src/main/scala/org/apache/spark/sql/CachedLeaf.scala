@@ -23,6 +23,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * cache is cleared (`spark.catalog.clearCache()`). A leaf whose cache was
   * released still reads, by recomputing from lineage.
   *
+  * That lineage ships with every task that reads the leaf, cached or not,
+  * up to the nearest shuffle: a leaf whose last stage read an earlier leaf
+  * narrowly, or holds a physical plan in its generated code, makes each
+  * later task deserialize those plans too. So every leaf
+  * [[graft.sources.Upload]] holds ends at a shuffle on the key (each delta
+  * and each applied revision) or at its source read (the start table,
+  * whose only other step is a broadcast join on the announced keys; the
+  * BDE reader broadcasts its Hadoop configuration rather than capturing
+  * it, so that read ships no more than its parser).
+  *
   * Lives in this package because `Dataset.ofRows`,
   * `LogicalRDD.fromDataset` and `DataTypeUtils` are `private[sql]`.
   */

@@ -3,10 +3,12 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
 import graft.operators.{Merge, Versioned}
 import graft.sources._
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.CachedData
 import org.apache.spark.sql.functions.lit
@@ -110,6 +112,21 @@ class UploadSpec extends SparkSpec {
     val result = Upload.run(spark, root, BdeConfig.parseTables(Config))
     // key 99 was announced for other_table only — must not appear anywhere
     assert(!result("orders").current.collect().exists(_.getLong(0) == 99L))
+  }
+
+  test("with no change table configured, the incoming file's keys are the announced keys") {
+    val root = mkRepo()
+    val orders = Upload.run(spark, root, BdeConfig.parseTables(
+      "TABLE orders  key=id  files ord"))("orders")
+    // 7 inserted and 2 updated; the delete of 5 is announced only in the
+    // change table, which this registry does not name
+    val cur = orders.current.collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(cur == Map(1L -> 10.0, 2L -> 21.0, 3L -> 30.0, 4L -> 40.0,
+      5L -> 50.0, 6L -> 60.0, 7L -> 70.0))
+    val d = Versioned.diff(orders.versioned, 1, 2, "id").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(d == Map(2L -> "U", 7L -> "I"))
   }
 
   test("post-load hooks fire per level with the full apply context") {
@@ -263,9 +280,10 @@ class UploadSpec extends SparkSpec {
   /** The level-0 of [[mkRepo]] plus `k` level-5 datasets. Dataset i inserts
     * key 100+i, updates key 1 + (i-1) mod 4 (price + i), re-delivers key 6
     * unchanged, and deletes the key the dataset before it inserted (5 for
-    * the first). Returns the repository and the expected final table.
+    * the first). Returns the repository, the expected final table and the
+    * keys the datasets announce.
     */
-  private def mkRepoK(k: Int): (String, Map[Long, (String, Double)]) = {
+  private def mkRepoK(k: Int): (String, Map[Long, (String, Double)], Set[Long]) = {
     val root = Files.createTempDirectory("graft-upload-k").toString
     put(s"$root/level_0/20240101000000/ord.crs",
       """TABLE orders
@@ -282,6 +300,7 @@ class UploadSpec extends SparkSpec {
         |""")
     var table = Map[Long, (String, Double)](1L -> ("a", 10.0), 2L -> ("b", 20.0),
       3L -> ("c", 30.0), 4L -> ("d", 40.0), 5L -> ("e", 50.0), 6L -> ("f", 60.0))
+    var announced = Set.empty[Long]
     for (i <- 1 to k) {
       val ds = f"$root/level_5/202401${i + 1}%02d000000"
       val (ins, upd, del) = (100L + i, 1L + (i - 1) % 4, if (i == 1) 5L else 99L + i)
@@ -310,8 +329,9 @@ class UploadSpec extends SparkSpec {
           |6|f|60.0|
           |""")
       table = table - del + (ins -> ((s"n$i", 100.0 + i))) + (upd -> updated)
+      announced ++= Set(ins, upd, 6L, del)
     }
-    (root, table)
+    (root, table, announced)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -330,7 +350,7 @@ class UploadSpec extends SparkSpec {
     def leaves(df: DataFrame): Int =
       df.queryExecution.analyzed.collectLeaves().size
     val currentLeaves = for (k <- Seq(2, 6)) yield {
-      val (root, want) = mkRepoK(k)
+      val (root, want, announced) = mkRepoK(k)
       val orders = Upload.run(spark, root, BdeConfig.parseTables(Config))("orders")
       val got = orders.current.collect()
         .map(r => r.getLong(0) -> ((r.getString(1), r.getDouble(2)))).toMap
@@ -347,15 +367,18 @@ class UploadSpec extends SparkSpec {
         r.getAs[Long]("expected_count") == 6L &&
           r.getAs[Long]("actual_count") == 6L &&
           r.getAs[String]("status") == "ok"), s"K=$k count checks")
-      assert(leaves(orders.versioned) == k + 1,
-        s"K=$k: versioned must read one leaf per revision")
+      assert(leaves(orders.versioned) == k + 2,
+        s"K=$k: versioned must read one leaf per delta plus the start and the slice")
       if (k == 6) {
-        // what the run leaves cached: the final revision plus one delta per
-        // apply, each at most the 4 keys it announced, not K+1 revisions
+        // what the run leaves cached: one copy of the start table (6 rows,
+        // as many as the final table: the count checks above), the final
+        // slice (the final rows under an announced key) and one delta per
+        // apply, each at most the 4 keys it announced
+        val slice = want.keys.count(announced)
         val cached = cachedRowCounts()
-        assert(cached.sum <= want.size + 4L * k,
+        assert(cached.sum <= want.size + slice + 4L * k,
           s"K=$k: cached relations hold ${cached.sum} rows ($cached), " +
-            s"expected at most ${want.size} + 4 x $k")
+            s"expected at most ${want.size} + $slice + 4 x $k")
       }
       // the leaves read their cached blocks through lineage: once the
       // cache is dropped they recompute, where a localCheckpoint leaf fails
@@ -370,6 +393,31 @@ class UploadSpec extends SparkSpec {
     }
     assert(currentLeaves.distinct.size == 1,
       s"current's leaf count at K = 2, 6: $currentLeaves")
+  }
+
+  test("task lineage stays small at K = 6: no leaf carries the plans before it") {
+    // a cached leaf whose last stage holds a physical plan, reads the leaf
+    // before it narrowly, or captures its reader's Hadoop configuration
+    // ships all of that with every task that reads it. Measured this way:
+    // current 55 KB, versioned 106 KB, each delta 23 KB; with the BDE reader
+    // capturing its configuration instead of broadcasting it, current reads
+    // 161 KB and versioned 212 KB. versioned reads K + 2 = 8 leaves, so its
+    // bound is twice the one for a single revision or delta.
+    val (root, _, _) = mkRepoK(6)
+    val actions = ArrayBuffer[(String, DataFrame)]()
+    val orders = Upload.run(spark, root, BdeConfig.parseTables(Config),
+      postApply = Seq(ev => ev.actions.foreach(a => actions += ev.dataset -> a)))("orders")
+    assert(actions.size == 6)
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    def kb(df: DataFrame): Double = ser.serialize(df.queryExecution.toRdd).limit / 1024.0
+    val sizes = (("current", orders.current, LineageBoundKb) +:
+      ("versioned", orders.versioned, 2 * LineageBoundKb) +:
+      actions.toSeq.map { case (ds, a) => (s"delta $ds", a, LineageBoundKb) })
+      .map { case (what, df, bound) => (what, kb(df), bound) }
+    assert(sizes.forall { case (_, n, bound) => n < bound },
+      "serialized task lineage: " +
+        sizes.map { case (w, n, bound) => f"$w $n%.1f KB (bound $bound)" }.mkString(", "))
+    spark.catalog.clearCache()
   }
 
   // ------------------------------------------- history and bookkeeping
@@ -464,6 +512,22 @@ class UploadSpec extends SparkSpec {
     m.toSeq.toDF("zid", "name")
   }
 
+  private def byName(df: DataFrame): DataFrame =
+    df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+
+  /** One [[Upload.run]] whose `postApply` hook records, at every apply, the
+    * table, the dataset, and the rows of the event's `previous` and
+    * `current` (columns by name), collected while the apply's caches live.
+    */
+  private def runSeen(root: String, seeds: Map[String, UploadSeed] = Map.empty)
+      : (Map[String, UploadedTable], Seq[Seen]) = {
+    val seen = ArrayBuffer[Seen]()
+    val got = Upload.run(spark, root, BdeConfig.parseTables(HistoryConfig), seeds = seeds,
+      postApply = Seq(ev => seen += Seen(ev.table, ev.dataset,
+        ev.previous.map(p => rows(byName(p))), rows(byName(ev.current)))))
+    (got, seen.toSeq)
+  }
+
   private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
     assert(got.dtypes.toSeq == want.dtypes.toSeq, s"$what: column order and types")
     assert(rows(got) == rows(want), s"$what: rows")
@@ -471,17 +535,18 @@ class UploadSpec extends SparkSpec {
 
   /** One upload run over datasets `from` to `until` of `h` — a fresh
     * level-0 load when `from` is 0, else seeded from the run before — held
-    * against [[Versioned.build]] over the true snapshots and against
+    * against [[Versioned.build]] over the true snapshots, against
     * bookkeeping over actions derived again by [[Merge.changesetActions]] /
-    * [[Merge.diffActions]].
+    * [[Merge.diffActions]], and its hooks' `previous`/`current` against the
+    * true snapshots before and after each apply.
     */
-  private def checkRun(h: History, got: Map[String, UploadedTable], from: Int,
+  private def checkRun(h: History, run: (Map[String, UploadedTable], Seq[Seen]), from: Int,
                        until: Int, what: String): Unit = {
     import spark.implicits._
+    val (got, seen) = run
     val revs = from to until
     val orders = got("orders")
     // by name: the column order of `current` is pinned by its own test
-    val byName = (df: DataFrame) => df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
     assertSame(byName(orders.current), byName(ordersDf(h, h.orders(until))),
       s"$what orders current")
     assertSame(orders.versioned,
@@ -508,13 +573,29 @@ class UploadSpec extends SparkSpec {
       zoneRevs.tail.map(i => Merge.bookkeeping(Merge.diffActions(
         zonesDf(h.zones(from)), zonesDf(h.zones(i)), "zid"), dsName(i), "zones"))
     assertSame(zones.bookkeeping, zoneBooks.reduce(_ unionByName _), s"$what zones bookkeeping")
+    // every apply's hook frames: the level-0 load has no previous table
+    def snap(df: DataFrame): Seq[String] = rows(byName(df))
+    def applies(t: String)(df: Int => DataFrame, after: Seq[Int], prev: Int => Int): Seq[Seen] =
+      (if (from == 0) Seq(Seen(t, dsName(0), None, snap(df(0)))) else Nil) ++
+        after.map(i => Seen(t, dsName(i), Some(snap(df(prev(i)))), snap(df(i))))
+    val wantSeen =
+      applies("orders")(i => ordersDf(h, h.orders(i)), revs.tail, _ - 1) ++
+        applies("zones")(i => zonesDf(h.zones(i)), zoneRevs.tail, _ => from)
+    Seq("orders", "zones").foreach { t =>
+      val (g, w) = (seen.filter(_.table == t), wantSeen.filter(_.table == t))
+      assert(g.map(_.dataset) == w.map(_.dataset), s"$what $t hook applies")
+      g.zip(w).foreach { case (a, b) =>
+        assert(a.previous == b.previous, s"$what $t@${a.dataset} hook previous")
+        assert(a.current == b.current, s"$what $t@${a.dataset} hook current")
+      }
+    }
   }
 
   test("versioned and bookkeeping equal the rebuild over the true snapshots") {
     for (k <- 1 to 6) {
       val h = history(k, new Random(7919L * k))
       val cfg = BdeConfig.parseTables(HistoryConfig)
-      checkRun(h, Upload.run(spark, writeRepo(h, k), cfg), 0, k, s"K=$k")
+      checkRun(h, runSeen(writeRepo(h, k)), 0, k, s"K=$k")
       if (k >= 2) {
         // the same history in two runs: the second resumes from the
         // state the first published
@@ -525,8 +606,7 @@ class UploadSpec extends SparkSpec {
           Upload.publishState(first(t).current, dsName(j), s"$store/$t")
           t -> Upload.seedFrom(spark, s"$store/$t")
         }.toMap
-        checkRun(h, Upload.run(spark, writeRepo(h, k), cfg, seeds = seeds), j, k,
-          s"K=$k seeded after $j")
+        checkRun(h, runSeen(writeRepo(h, k), seeds), j, k, s"K=$k seeded after $j")
       }
       spark.catalog.clearCache()
     }
@@ -562,12 +642,23 @@ class UploadSpec extends SparkSpec {
 object UploadSpec {
   type Img = (Option[String], Option[Double])
 
+  /** Bound on the closure-serialized RDD of one revision or delta that
+    * `Upload.run` hands out: what a task reading it deserializes.
+    */
+  val LineageBoundKb = 64
+
   /** One level-5 dataset of a random history: the `orders` keys it
     * announces, the images it delivers for them, and the full `zones`
     * snapshot it carries.
     */
   final case class Step(announced: Seq[Long], images: Map[Long, Img],
                                 zones: Map[Long, Option[String]])
+
+  /** What a `postApply` hook saw at one apply: the rows of `previous`
+    * (None at a level-0 load) and of `current`, columns by name.
+    */
+  final case class Seen(table: String, dataset: String,
+                        previous: Option[Seq[String]], current: Seq[String])
 
   final case class History(keyFirst: Boolean, orders0: Map[Long, Img],
                                    zones0: Map[Long, Option[String]], steps: Seq[Step]) {
