@@ -34,20 +34,24 @@ object DatasetRev {
     datasets.distinct.sorted.zipWithIndex.map { case (d, i) => d -> (i + 1) }.toMap
 
   /** Build one table's store from its `(dataset, snapshot)` applies using
-    * the shared map: the first snapshot opens the store at its dataset's
-    * revision; each later one appends at its dataset's revision
-    * ([[Versioned.appendRevision]] — open rows close/open, gaps span).
+    * the shared map: one [[Versioned.build]] over the snapshots indexed
+    * 1..n in dataset-name order, relabelled to the datasets' revisions (a
+    * version spans the datasets the table skips). `revOf` must name every
+    * dataset and increase in dataset-name order.
     */
   def buildBracketed(snaps: Seq[(String, DataFrame)],
                      revOf: Map[String, Int], key: String): DataFrame = {
     require(snaps.nonEmpty, "a bracketed store needs at least one apply")
     val sorted = snaps.sortBy(_._1)
-    var store = Versioned.build(
-      Seq(revOf(sorted.head._1) -> sorted.head._2), key)
-    sorted.tail.foreach { case (ds, df) =>
-      store = Versioned.appendRevision(store, df, revOf(ds), key)
-    }
-    store
+    val revs = sorted.map { case (ds, _) =>
+      revOf.getOrElse(ds, throw new IllegalArgumentException(s"dataset $ds has no revision")) }
+    for (i <- revs.indices.tail) require(revs(i - 1) < revs(i),
+      s"dataset ${sorted(i)._1} has revision ${revs(i)}, not above ${sorted(i - 1)._1}'s ${revs(i - 1)}")
+    // element_at with a null index need not return NULL: guard open rows
+    def relabel(c: String) = when(col(c).isNotNull, element_at(typedLit(revs), col(c)))
+    Versioned.build(sorted.zipWithIndex.map { case ((_, df), i) => (i + 1) -> df }, key)
+      .withColumn(Versioned.Created, relabel(Versioned.Created))
+      .withColumn(Versioned.Expired, relabel(Versioned.Expired))
   }
 
   /** The table as of dataset `d` — a pure filter at the shared revision. */
@@ -87,13 +91,9 @@ object DatasetRevScenarios extends graft.GateModule {
 
   private def stores(s: SparkSession, dir: String): (DataFrame, DataFrame, Map[String, Int]) = {
     val revOf = DatasetRev.revisionMap(Seq(DA, DB, DC))
-    // orders changes in ALL three datasets, so its bracketed store carries
-    // revisions 1..3 — bit-identical to the shared `versioned_store`
-    // artifact (incremental append ≡ batch build, both gates hash the same
-    // oracle); reuse it rather than building the same store twice per
-    // session. The bracketing-specific content — the SHARED revision map
-    // and a table whose applies SKIP a revision — lives in the customer
-    // store below, which [[DatasetRev.buildBracketed]] constructs.
+    // orders changes in ALL three datasets, so its bracketed store IS the
+    // shared `versioned_store` artifact (revisions 1..3); the bracketing
+    // content — a table whose applies SKIP a revision — is customer's.
     val ord = VersionedScenarios.store(s, dir)
     val cust = graft.Memo.cachedLeaf(s, "dsrev_customer", dir)(
       DatasetRev.buildBracketed(

@@ -183,6 +183,8 @@ object Merge {
     * duration stamped at persist time by [[graft.sources.ParquetSink
     * .writeApplyResult]]. Callers that only need the table keep using
     * [[applyActions]].
+    * No library code calls it; the benchmark's `graftbench/Replay.scala`
+    * (built against this library) does, so it must stay.
     */
   def applyWithBookkeeping(cur: DataFrame, incoming: DataFrame,
                            actions: DataFrame, key: String,
@@ -196,6 +198,8 @@ object Merge {
     * the real classification is re-derived by [[changesetActions]], exactly
     * as the reference re-derives it (`_bde_CreateIncDeletes/Inserts/
     * Updates`).
+    * No library code calls it; the benchmark's `graftbench/Replay.scala`
+    * (built against this library) does, so it must stay.
     */
   def changeKeysFromChangeTable(changeTable: DataFrame, tableName: String,
                                 key: String): DataFrame =

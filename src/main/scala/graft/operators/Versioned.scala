@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   * `_ver_created`); [[diff]] reuses the level-0 classifier on two
   * reconstructions.
   *
+  * Every store writer (`Upload`, [[appendRevision]], `CdcToVersioned`)
+  * takes one step per apply over its delta ([[Merge.diffDelta]]):
+  * [[close]], [[advance]], then the [[store]] layout.
+  *
   * Scale: the window is partitioned by key — no global ordering anywhere; a
   * 100 TB history shuffles once on the key and scans linearly per key. The
   * append-only store pattern means each new revision only appends rows whose
@@ -56,13 +60,41 @@ object Versioned {
       .drop("_ver_grp", "_last_rev")
   }
 
+  /** The versions an apply closes: the delta's `leaving` images (with
+    * their `_ver_created`), stamped `_ver_expired = rev`.
+    */
+  def close(delta: DataFrame, rev: Int): DataFrame =
+    delta.filter(col(Merge.Leaving).isNotNull).select(col(s"${Merge.Leaving}.*"))
+      .withColumn(Expired, lit(rev))
+
+  /** The open rows after an apply (`bde_ApplyLevel5Update`'s
+    * `table_version` step): `open` without the delta's leaving keys, plus
+    * its `entering` images stamped `_ver_created = rev`.
+    */
+  def advance(open: DataFrame, delta: DataFrame, key: String, rev: Int): DataFrame = {
+    val leaving = delta.filter(col(Merge.Leaving).isNotNull).select(key)
+    open.join(leaving, Seq(key), "left_anti")
+      .unionByName(delta.filter(col(Merge.Entering).isNotNull)
+        .select(col(s"${Merge.Entering}.*"))
+        .withColumn(Created, lit(rev)))
+  }
+
+  /** Closed versions and open rows (`_ver_expired` null) in [[build]]'s
+    * column order and int types.
+    */
+  def store(closed: Seq[DataFrame], open: DataFrame, key: String): DataFrame = {
+    val cols = (key +: open.columns.filter(c => c != key && c != Created).toSeq :+ Created).map(col)
+    (closed.map(_.select(cols :+ col(Expired): _*)) :+
+      open.select(cols :+ lit(null).cast("int").as(Expired): _*)).reduce(_ union _)
+  }
+
   /** Incrementally append one revision to an existing store — the
     * reference's actual apply path (`table_version` never rebuilds a
     * table's history; `ver_apply_table_differences` closes and opens
-    * versions in place). Open rows diff against the incoming snapshot with
-    * the level-0 classifier; D/U keys close (`_ver_expired = rev`), I/U
-    * images open (`_ver_created = rev`), `0` keys are untouched, and the
-    * closed history is carried through unchanged.
+    * versions in place). One [[Merge.diffDelta]] of the open rows against
+    * the snapshot, then the same [[close]] / [[advance]] / [[store]] step
+    * `Upload` runs per apply: D/U keys close, I/U images open, `0` keys
+    * are untouched, and the closed history is carried through unchanged.
     *
     * At 100 TB this is the whole point of the store: a dataset load costs
     * one diff of open rows vs the snapshot — O(table), not O(history) —
@@ -72,22 +104,10 @@ object Versioned {
     */
   def appendRevision(store: DataFrame, snapshot: DataFrame, rev: Int,
                      key: String): DataFrame = {
-    val dataCols =
-      store.columns.filter(c => c != key && c != Created && c != Expired).toSeq
-    val open = store.filter(col(Expired).isNull)
-    val actions = Merge.diffActions(
-      open.select((key +: dataCols).map(col): _*), snapshot, key)
-    val closingKeys = actions.filter(col(Merge.Action).isin("D", "U")).select(key)
-    val enteringKeys = actions.filter(col(Merge.Action).isin("I", "U")).select(key)
-    val closed = open.join(closingKeys, Seq(key), "left_semi")
-      .withColumn(Expired, lit(rev).cast("int"))
-    val stillOpen = open.join(closingKeys, Seq(key), "left_anti")
-    val entering = snapshot.join(enteringKeys, Seq(key), "left_semi")
-      .withColumn(Created, lit(rev).cast("int"))
-      .withColumn(Expired, lit(null).cast("int"))
-      .select(store.columns.map(col).toIndexedSeq: _*)
-    store.filter(col(Expired).isNotNull)
-      .unionByName(closed).unionByName(stillOpen).unionByName(entering)
+    val open = store.filter(col(Expired).isNull).drop(Expired)
+    val delta = Merge.diffDelta(open, snapshot, key)
+    Versioned.store(Seq(store.filter(col(Expired).isNotNull), close(delta, rev)),
+      advance(open, delta, key, rev), key)
   }
 
   /** Retention vacuum: drop every version that expired at or before the
@@ -168,11 +188,9 @@ object VersionedScenarios extends graft.GateModule {
     survivors.unionByName(reinserts)
   }
 
-  // built+cached once per (session, dir): versioned_table, table_at_revision
-  // and version_diff all read the same store, as production reads would
-  // (and DatasetRevScenarios brackets the same artifact under its shared
-  // revision map — append-built and batch-built stores are bit-identical,
-  // both gates hash the same oracle)
+  // built+cached once per (session, dir): versioned_table,
+  // table_at_revision, version_diff and DatasetRevScenarios' orders all
+  // read the same store, as production reads would
   private[operators] def store(s: SparkSession, dir: String): DataFrame =
     graft.Memo.cachedLeaf(s, "versioned_store", dir) {
       Versioned.build(

@@ -97,4 +97,15 @@ object BdeWriter {
       }
     }.collect().toSeq.sorted // paths only (metadata), never row data
   }
+
+  /** Write `df` as the one BDE file `<dsDir>/<name>.crs`, staged by
+    * [[write]] and renamed into place.
+    */
+  def writeFile(df: DataFrame, dsDir: String, name: String, table: String): Unit = {
+    val stage = new Path(s"$dsDir/.stage_$name")
+    val fs = stage.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val paths = write(df.coalesce(1), stage.toString, table)
+    fs.rename(new Path(paths.head), new Path(s"$dsDir/$name.crs"))
+    fs.delete(stage, true): Unit
+  }
 }

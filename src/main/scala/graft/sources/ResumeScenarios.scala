@@ -148,30 +148,21 @@ object ResumeScenarios extends graft.GateModule {
   private def prepareAt(s: SparkSession, dir: String): (String, String) = {
     val base = s"${sys.props("java.io.tmpdir")}/graft-resume-scn/" +
       new java.io.File(dir).getName
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(base).getFileSystem(conf)
+    val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
     val repoA = s"$base/repoA"
     val repoB = s"$base/repoB"
     val store = s"$base/store"
-    def writeOne(df: DataFrame, dsDir: String, fname: String,
-                 table: String): Unit = {
-      val stage = s"$base/.stage_$fname"
-      val paths = BdeWriter.write(df.coalesce(1), stage, table)
-      fs.mkdirs(new Path(dsDir))
-      fs.rename(new Path(paths.head), new Path(s"$dsDir/$fname.crs")): Unit
-      fs.delete(new Path(stage), true): Unit
-    }
     def chgTable(keys: DataFrame, ts: String): DataFrame =
       keys.select(col(Key).as("id"), lit("orders").as("tablename"),
         col(Key).as("tablekeyvalue"), lit("U").as("action"),
         expr(s"timestamp_ntz '$ts'").as("timestamp"))
-    writeOne(cur0(s, dir), s"$repoA/level_0/$D0", "ord", "orders")
-    writeOne(inc1(s, dir), s"$repoA/level_5/$D1", "ord", "orders")
-    writeOne(chgTable(chg1(s, dir), "2024-01-03 00:00:01"),
+    BdeWriter.writeFile(cur0(s, dir), s"$repoA/level_0/$D0", "ord", "orders")
+    BdeWriter.writeFile(inc1(s, dir), s"$repoA/level_5/$D1", "ord", "orders")
+    BdeWriter.writeFile(chgTable(chg1(s, dir), "2024-01-03 00:00:01"),
       s"$repoA/level_5/$D1", "xaud", "cbe_data")
-    writeOne(inc2(s, dir), s"$repoB/level_5/$D2", "ord", "orders")
-    writeOne(chgTable(chg2(s, dir), "2024-01-05 00:00:01"),
+    BdeWriter.writeFile(inc2(s, dir), s"$repoB/level_5/$D2", "ord", "orders")
+    BdeWriter.writeFile(chgTable(chg2(s, dir), "2024-01-05 00:00:01"),
       s"$repoB/level_5/$D2", "xaud", "cbe_data")
     // run #1: the level-0 era, then publish its state for run #2
     val r1 = Upload.run(s, repoA, BdeConfig.parseTables(Run1Conf))

@@ -72,15 +72,14 @@ final case class ApplyEvent(
   * `_bde_RecordDatasetLoaded` do in the reference: its classify join is
   * held as one small cached **delta leaf** — each announced key's action
   * with the row leaving the current table (D/U/X) and the row entering
-  * from the incoming file (I/U/X). The next revision is the current one
-  * without the leaving keys plus the entering rows; it carries an int
-  * `_ver_created` column (1 for the start table or seed, `r` for rows
-  * entering at apply `r`) that the frames handed to callers and hooks
-  * never show. After the loop, `versioned` is the union of every delta's
-  * leaving rows (`_ver_expired = r`) and the final revision's rows
-  * (`_ver_expired` null), in [[Versioned.build]]'s column order and types,
-  * and `bookkeeping` is [[Merge.bookkeeping]] over each delta's action
-  * column: nothing is re-stacked or classified a second time.
+  * from the incoming file (I/U/X). The next revision is
+  * [[Versioned.advance]] over the delta; it carries an int `_ver_created`
+  * column (1 for the start table or seed, `r` for rows entering at apply
+  * `r`) that the frames handed to callers and hooks never show. After the
+  * loop, `versioned` is [[Versioned.store]] over every delta's
+  * [[Versioned.close]] and the final revision, and `bookkeeping` is
+  * [[Merge.bookkeeping]] over each delta's action column: nothing is
+  * re-stacked or classified a second time.
   *
   * Scale: a level-5 changeset touches only the keys it announces, as
   * `bde_ApplyLevel5Update` does. Before the loop, the start table (the
@@ -322,11 +321,7 @@ object Upload {
       val r = deltas.size + 2
       // one job materializes the delta and the next revision, so the
       // revision's shuffle runs beside the classify join
-      val leaving = deltaIn.filter(col(Merge.Leaving).isNotNull).select(key)
-      val nextIn = rev.repartition(col(key)).join(leaving, Seq(key), "left_anti")
-        .unionByName(deltaIn.filter(col(Merge.Entering).isNotNull)
-          .select(col(s"${Merge.Entering}.*"))
-          .withColumn(Versioned.Created, lit(r)))
+      val nextIn = Versioned.advance(rev.repartition(col(key)), deltaIn, key, r)
       val (next, nextN) = CachedLeaf(nextIn)
       val delta = CachedLeaf.leaf(deltaIn)
       deltas += ds.name -> delta
@@ -355,14 +350,8 @@ object Upload {
       (if (startLevel == 0) Seq(inserts(startN)) else Nil) ++
         deltas.map { case (ds, d) => Merge.bookkeeping(d.select(Merge.Action), ds, t.name) }
     val book = books.reduceOption(_ unionByName _).getOrElse(inserts(0))
-    // history: every row an apply closed, then the rows still open — the
-    // column order and types of [[Versioned.build]]
-    val historyCols = (key +: schema.fieldNames.filter(_ != key).toSeq :+ Versioned.Created).map(col)
-    val closed = deltas.zipWithIndex.map { case ((_, d), i) =>
-      d.filter(col(Merge.Leaving).isNotNull).select(col(s"${Merge.Leaving}.*"))
-        .select(historyCols :+ lit(i + 2).as(Versioned.Expired): _*)
-    }
-    val open = whole(rev).select(historyCols :+ lit(null).cast("int").as(Versioned.Expired): _*)
-    UploadedTable(data(whole(rev)), (closed :+ open).reduce(_ union _), book, graded)
+    // history: every row an apply closed, then the rows still open
+    val closed = deltas.zipWithIndex.map { case ((_, d), i) => Versioned.close(d, i + 2) }
+    UploadedTable(data(whole(rev)), Versioned.store(closed.toSeq, whole(rev), key), book, graded)
   }
 }

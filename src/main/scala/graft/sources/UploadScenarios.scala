@@ -96,24 +96,15 @@ object UploadScenarios extends graft.GateModule {
   private def buildRepoAt(s: SparkSession, dir: String): String = {
     val root = s"${sys.props("java.io.tmpdir")}/graft-upload-scn/" +
       new java.io.File(dir).getName
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(root).getFileSystem(conf)
+    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new Path(root), true)
-    def writeOne(df: DataFrame, dsDir: String, fname: String,
-                 table: String): Unit = {
-      val stage = s"$root/.stage_$fname"
-      val paths = BdeWriter.write(df.coalesce(1), stage, table)
-      fs.mkdirs(new Path(dsDir))
-      fs.rename(new Path(paths.head), new Path(s"$dsDir/$fname.crs")): Unit
-      fs.delete(new Path(stage), true): Unit
-    }
-    writeOne(cur(s, dir), s"$root/level_0/$D0", "ord", "orders")
-    writeOne(incoming(s, dir), s"$root/level_5/$D1", "ord", "orders")
+    BdeWriter.writeFile(cur(s, dir), s"$root/level_0/$D0", "ord", "orders")
+    BdeWriter.writeFile(incoming(s, dir), s"$root/level_5/$D1", "ord", "orders")
     val chgTable = changeKeys(s, dir).select(
       col(Key).as("id"), lit("orders").as("tablename"),
       col(Key).as("tablekeyvalue"), lit("U").as("action"),
       expr("timestamp_ntz '2024-01-02 00:00:01'").as("timestamp"))
-    writeOne(chgTable, s"$root/level_5/$D1", "xaud", "cbe_data")
+    BdeWriter.writeFile(chgTable, s"$root/level_5/$D1", "xaud", "cbe_data")
     root
   }
 

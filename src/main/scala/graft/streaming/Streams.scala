@@ -199,7 +199,7 @@ object StreamTopK {
   * boundary (time travel over micro-batches).
   */
 object CdcToVersioned {
-  import graft.operators.{Merge, Versioned}
+  import graft.operators.Versioned
   import org.apache.spark.sql.SparkSession
 
   /** Apply one micro-batch of changes as revision `rev` of the store at
@@ -209,14 +209,14 @@ object CdcToVersioned {
   def applyBatch(s: SparkSession, batch: DataFrame, path: String,
                  rev: Int): DataFrame = {
     import s.implicits._
-    val published = graft.sources.ManifestStore.currentVersion(s, path)
-    val cur: DataFrame =
-      if (published.isDefined)
-        Versioned.atRevision(graft.sources.ManifestStore.resolve(s, path),
-          rev - 1)
-      else Seq.empty[(Long, Double)].toDF("key", "payload")
+    val store =
+      if (graft.sources.ManifestStore.currentVersion(s, path).isDefined)
+        graft.sources.ManifestStore.resolve(s, path)
+      else Versioned.store(Nil,
+        Seq.empty[(Long, Double, Int)].toDF("key", "payload", Versioned.Created), "key")
+    val cur = Versioned.atRevision(store, rev - 1)
     // derive the post-batch snapshot: latest record per key wins, deletes
-    // drop the key — then diff against the current open rows
+    // drop the key — then append it as the store's next revision
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("seq").desc)
     val latest = batch.withColumn("rn", row_number().over(w))
@@ -224,13 +224,7 @@ object CdcToVersioned {
     val snapshot = cur.join(latest.select("key"), Seq("key"), "left_anti")
       .unionByName(latest.filter(col("action") =!= "D")
         .select(col("key"), col("payload")))
-    val next =
-      if (published.isDefined)
-        Versioned.appendRevision(graft.sources.ManifestStore.resolve(s, path),
-          snapshot, rev, "key")
-      else snapshot
-        .withColumn(Versioned.Created, lit(rev).cast("int"))
-        .withColumn(Versioned.Expired, lit(null).cast("int"))
+    val next = Versioned.appendRevision(store, snapshot, rev, "key")
     // Object-store-safe commit: the new store version is written to its own
     // immutable directory and becomes visible only when the manifest pointer
     // lands ([[graft.sources.ManifestStore]]); a crash anywhere leaves the

@@ -47,6 +47,40 @@ class VersionedPropSpec extends SparkSpec {
     })
   }
 
+  test("property: a bracketed store over gapped revisions answers every dataset") {
+    import graft.operators.DatasetRev
+    val dss = (1 to 8).map(i => s"2024010${i}000000")
+    val revOf = DatasetRev.revisionMap(dss)
+    val applies = for {
+      n <- Gen.choose(1, 6)
+      written <- Gen.pick(n, dss)
+      ms <- Gen.listOfN(n, snapGen)
+    } yield written.sorted.zip(ms).toSeq
+    check(Prop.forAll(applies) { snaps =>
+      val store = DatasetRev.buildBracketed(snaps.map { case (d, m) => d -> df(m) }, revOf, "k")
+      // as of each dataset: the table's last apply at or before it, else empty
+      dss.forall { d =>
+        val want = snaps.filter(_._1 <= d).lastOption.fold(Map.empty[Long, Int])(_._2)
+        DatasetRev.atDataset(store, revOf, d).as[(Long, Int)].collect().toMap == want
+      }
+    })
+  }
+
+  test("a 6-dataset bracketed store reads each snapshot once") {
+    import graft.operators.DatasetRev
+    val dss = (1 to 8).map(i => s"2024010${i}000000")
+    val revOf = DatasetRev.revisionMap(dss)
+    val written = Seq(1, 2, 4, 5, 7, 8).map(i => dss(i - 1))
+    val snaps = written.zipWithIndex.map { case (d, i) =>
+      d -> df((0L until 4L).map(k => k -> (k.toInt + i) % 3).toMap)
+    }
+    val store = DatasetRev.buildBracketed(snaps, revOf, "k")
+    val leaves = store.queryExecution.analyzed.collectLeaves().size
+    assert(leaves == snaps.size, s"the store's plan reads $leaves leaves")
+    assert(DatasetRev.atDataset(store, revOf, dss(5)).as[(Long, Int)].collect().toMap ==
+      snaps(3)._2.as[(Long, Int)].collect().toMap)
+  }
+
   test("property: atRevision reconstructs every input snapshot exactly") {
     check(Prop.forAll(snapGen, snapGen, snapGen) { (m1, m2, m3) =>
       val snaps = Seq(1 -> df(m1), 2 -> df(m2), 3 -> df(m3))

@@ -107,6 +107,18 @@ class VersionedSpec extends SparkSpec {
     assert(at(storeB, dc) == Set(10L -> "p2"))
   }
 
+  test("dataset bracketing rejects a revision map missing a dataset or out of dataset order") {
+    import graft.operators.DatasetRev
+    val (da, db) = ("20240101000000", "20240102000000")
+    val snaps = Seq(db -> df(Seq(1L -> "b"), 2), da -> df(Seq(1L -> "a"), 1))
+    val swapped = intercept[IllegalArgumentException](
+      DatasetRev.buildBracketed(snaps, Map(da -> 2, db -> 1), "id"))
+    assert(swapped.getMessage.contains(db), swapped.getMessage)
+    val missing = intercept[IllegalArgumentException](
+      DatasetRev.buildBracketed(snaps, Map(da -> 1), "id"))
+    assert(missing.getMessage.contains(db), missing.getMessage)
+  }
+
   test("vacuum keeps every revision at or after retention reconstructable") {
     val store = Versioned.build(
       Seq(1 -> VersionedScenarios.r1(spark, sf),
